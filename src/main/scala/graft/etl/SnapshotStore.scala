@@ -1631,6 +1631,19 @@ object SnapshotStore {
     })
   }
 
+  /** The schema/spec evolutions' shared preamble: the head manifest and
+    * its schema, each refused loudly when missing. */
+  private def headWithSchema(root: String, verb: String, before: String)
+      : (Manifest, org.apache.spark.sql.types.StructType) = {
+    val prior = current(root).getOrElse(
+      throw new IllegalStateException(s"no snapshot at $root to $verb"))
+    val schema = prior.schema.getOrElse(
+      throw new IllegalStateException(
+        s"table at $root predates schema-carrying manifests — " +
+          s"recommit with a full write before $before"))
+    (prior, schema)
+  }
+
   /** `ALTER TABLE … DROP COLUMN` — a METADATA-ONLY commit in the
     * column-ID model, the mirror of [[renameColumns]]: the field
     * leaves the manifest schema (reads stop projecting it in O(1) at
@@ -1644,12 +1657,7 @@ object SnapshotStore {
     * ~KB manifest write at any table size. */
   def dropColumns(root: String, names: Seq[String]): Long =
     withCommitLock(root) {
-      val prior = current(root).getOrElse(
-        throw new IllegalStateException(s"no snapshot at $root to alter"))
-      val schema0 = prior.schema.getOrElse(
-        throw new IllegalStateException(
-          s"table at $root predates schema-carrying manifests — " +
-            "recommit with a full write before dropping columns"))
+      val (prior, schema0) = headWithSchema(root, "alter", "dropping columns")
       // adopt ids/physical names first (legacy tables): the retired
       // registry needs both
       val schema = stampIds(schema0)
@@ -1749,12 +1757,7 @@ object SnapshotStore {
   def widenColumnTypes(root: String,
       changes: Seq[(String, org.apache.spark.sql.types.DataType)]): Long =
     withCommitLock(root) {
-      val prior = current(root).getOrElse(
-        throw new IllegalStateException(s"no snapshot at $root to alter"))
-      val schema = prior.schema.getOrElse(
-        throw new IllegalStateException(
-          s"table at $root predates schema-carrying manifests — " +
-            "recommit with a full write before widening columns"))
+      val (prior, schema) = headWithSchema(root, "alter", "widening columns")
       require(changes.nonEmpty, "ALTER COLUMN TYPE: nothing to widen")
       val resolved = changes.map { case (n, to) =>
         val f = schema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
@@ -1875,12 +1878,7 @@ object SnapshotStore {
       adds: Seq[(Seq[String], org.apache.spark.sql.types.StructField)])
       : Long =
     withCommitLock(root) {
-      val prior = current(root).getOrElse(
-        throw new IllegalStateException(s"no snapshot at $root to alter"))
-      val schema0 = prior.schema.getOrElse(
-        throw new IllegalStateException(
-          s"table at $root predates schema-carrying manifests — " +
-            "recommit with a full write before nested evolution"))
+      val (prior, schema0) = headWithSchema(root, "alter", "nested evolution")
       require(adds.nonEmpty, "ADD COLUMN (nested): nothing to add")
       adds.foreach { case (p, f) =>
         require(p.nonEmpty, s"ADD COLUMN ${f.name}: empty parent path")
@@ -1933,12 +1931,7 @@ object SnapshotStore {
     * struct. */
   def dropNestedColumns(root: String, paths: Seq[Seq[String]]): Long =
     withCommitLock(root) {
-      val prior = current(root).getOrElse(
-        throw new IllegalStateException(s"no snapshot at $root to alter"))
-      val schema0 = prior.schema.getOrElse(
-        throw new IllegalStateException(
-          s"table at $root predates schema-carrying manifests — " +
-            "recommit with a full write before nested evolution"))
+      val (prior, schema0) = headWithSchema(root, "alter", "nested evolution")
       require(paths.nonEmpty && paths.forall(_.length >= 2),
         "DROP COLUMN (nested): each path needs parent.child segments " +
           "(top-level drops go through dropColumns)")
@@ -1976,12 +1969,7 @@ object SnapshotStore {
   def renameNestedColumns(root: String,
       renames: Seq[(Seq[String], String)]): Long =
     withCommitLock(root) {
-      val prior = current(root).getOrElse(
-        throw new IllegalStateException(s"no snapshot at $root to alter"))
-      val schema0 = prior.schema.getOrElse(
-        throw new IllegalStateException(
-          s"table at $root predates schema-carrying manifests — " +
-            "recommit with a full write before nested evolution"))
+      val (prior, schema0) = headWithSchema(root, "alter", "nested evolution")
       require(renames.nonEmpty && renames.forall(_._1.length >= 2),
         "RENAME COLUMN (nested): each path needs parent.child segments " +
           "(top-level renames go through renameColumns)")
@@ -2047,12 +2035,7 @@ object SnapshotStore {
     * size. */
   def renameColumns(root: String, renames: Seq[(String, String)]): Long =
     withCommitLock(root) {
-      val prior = current(root).getOrElse(
-        throw new IllegalStateException(s"no snapshot at $root to alter"))
-      val schema0 = prior.schema.getOrElse(
-        throw new IllegalStateException(
-          s"table at $root predates schema-carrying manifests — " +
-            "recommit with a full write before renaming columns"))
+      val (prior, schema0) = headWithSchema(root, "alter", "renaming columns")
       val schema = stampIds(schema0)
       require(renames.nonEmpty, "RENAME COLUMN: nothing to rename")
       // resolve each old name case-insensitively (Spark's resolver)
@@ -2573,12 +2556,7 @@ object SnapshotStore {
   def addColumns(root: String,
       newFields: Seq[org.apache.spark.sql.types.StructField]): Long =
     withCommitLock(root) {
-      val prior = current(root).getOrElse(
-        throw new IllegalStateException(s"no snapshot at $root to alter"))
-      val schema = prior.schema.getOrElse(
-        throw new IllegalStateException(
-          s"table at $root predates schema-carrying manifests — " +
-            "recommit with a full write before altering"))
+      val (prior, schema) = headWithSchema(root, "alter", "altering")
       newFields.foreach { f =>
         require(f.nullable,
           s"ADD COLUMN ${f.name}: new columns must be nullable — " +
@@ -3104,12 +3082,7 @@ object SnapshotStore {
     * addressing key. Returns the committed snapshot id. */
   def evolvePartitionSpec(root: String, newSpec: String,
       newSortCol: Option[String] = None): Long = withCommitLock(root) {
-    val prior = current(root).getOrElse(
-      throw new IllegalStateException(s"no snapshot at $root to evolve"))
-    val schema = prior.schema.getOrElse(
-      throw new IllegalStateException(
-        s"table at $root predates schema-carrying manifests — " +
-          "recommit with a full write before evolving the spec"))
+    val (prior, schema) = headWithSchema(root, "evolve", "evolving the spec")
     val (oldSpec, oldSort) = tableLayout(prior).getOrElse(
       throw new IllegalStateException(
         s"table at $root predates layout-recording manifests — " +
@@ -3766,6 +3739,9 @@ object SnapshotStore {
     require(name.toLongOption.isEmpty,
       s"tag name '$name' is all digits — ambiguous with a manifest id " +
         "in VERSION AS OF; include a letter")
+    // seq 0 is manifestAtSeq's empty pre-table state, not a commit
+    require(seq >= 1L,
+      s"tag '$name': seq $seq is not a commit — chain seqs start at 1")
     withCommitLock(root) {
       val m = manifestAtSeq(root, seq) // loud on gaps / expired slots
       Files.createDirectories(Paths.get(root, "refs"))

@@ -15,7 +15,7 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, W
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder, ParquetTable}
 import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** SQL surface for [[SnapshotStore]] tables — reads AND writes. Reads
@@ -1655,512 +1655,90 @@ class GraftSnapshotCatalog extends TableCatalog
   // ---- procedures (CALL snap.system.merge_into(…)) -----------------------
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
-    Array("merge_into", "history", "expire", "compact",
-      "rewrite_data_files", "rollback",
-      "tag", "untag", "tags", "evolve_spec", "branch", "fast_forward",
-      "drop_branch")
-      .map(Identifier.of(Array("system"), _))
+    SnapProcedures.All.map(d => Identifier.of(Array("system"), d.name))
+      .toArray
 
   override def loadProcedure(ident: Identifier): UnboundProcedure =
-    ident.name() match {
-      case "merge_into" => new MergeIntoProcedure(warehouse)
-      case "history" => new HistoryProcedure(warehouse)
-      case "expire" => new ExpireProcedure(warehouse)
-      case "compact" => new CompactProcedure(warehouse)
-      case "rewrite_data_files" => new RewriteDataFilesProcedure(warehouse)
-      case "rollback" => new RollbackProcedure(warehouse)
-      case "tag" => new TagProcedure(warehouse)
-      case "untag" => new UntagProcedure(warehouse)
-      case "tags" => new TagsProcedure(warehouse)
-      case "evolve_spec" => new EvolveSpecProcedure(warehouse)
-      case "branch" => new BranchProcedure(warehouse)
-      case "fast_forward" => new FastForwardProcedure(warehouse)
-      case "drop_branch" => new DropBranchProcedure(warehouse)
-      case other => throw new UnsupportedOperationException(
-        s"unknown procedure '$other' — this catalog provides " +
-          "system.merge_into(table, source, key, delete_flag), " +
-          "system.history(table), system.expire(table, keep_last), " +
-          "system.compact(table), " +
-          "system.rewrite_data_files(table, target_file_bytes), " +
-          "system.rollback(table, to_seq), " +
-          "system.tag(table, name, seq), system.untag(table, name), " +
-          "system.tags(table), system.evolve_spec(table, new_spec), " +
-          "system.branch(table, name), " +
-          "system.fast_forward(table, name) and " +
-          "system.drop_branch(table, name)")
-    }
-}
-
-/** `CALL <catalog>.system.evolve_spec(table, new_spec)` — Iceberg-style
-  * partition-spec evolution from SQL: a metadata-only commit through
-  * the locked [[SnapshotStore.evolvePartitionSpec]] — existing entries
-  * keep (and record) their outgoing spec, new commits land under the
-  * new one, row-level DML migrates touched partitions. Returns the
-  * committed snapshot id. */
-class EvolveSpecProcedure(warehouse: String) extends UnboundProcedure {
-
-  override def name(): String = "evolve_spec"
-  override def description(): String =
-    "Evolve a graft snapshot table's partition spec for future commits"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "evolve_spec"
-      override def description(): String =
-        EvolveSpecProcedure.this.description()
-      override def isDeterministic: Boolean = false
-
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build(),
-        ProcedureParameter.in("new_spec", StringType)
-          .comment("new partition spec, e.g. 'month,bucket(4,id)'")
-          .build())
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val newSpec = input.getUTF8String(1).toString
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        SnapProcedures.singleLongResult("snapshot_id",
-          SnapshotStore.evolvePartitionSpec(root, newSpec))
+    SnapProcedures.All.find(_.name == ident.name())
+      .map(new GraftSnapshotProcedure(warehouse, _))
+      .getOrElse {
+        val sigs = SnapProcedures.All.map(d =>
+          s"system.${d.name}(${d.params.map(_.name()).mkString(", ")})")
+        throw new UnsupportedOperationException(
+          s"unknown procedure '${ident.name()}' — this catalog provides " +
+            sigs.init.mkString(", ") + " and " + sigs.last)
       }
-    }
 }
 
-/** `CALL <catalog>.system.branch(table, name)` — cut a WAP branch at
-  * the current head ([[SnapshotStore.branch]]): staged commits land on
-  * the branch (Scala [[SnapshotStore.appendToBranch]] /
-  * [[SnapshotStore.resetBranch]]; read with
-  * `spark.read.format("graft-snapshot").option("branch", name)`),
-  * invisible to main readers until `system.fast_forward` publishes
-  * them. Returns the fork's manifest id. */
-class BranchProcedure(warehouse: String) extends UnboundProcedure {
+/** One `CALL <catalog>.system.<name>(…)` procedure: its parameters
+  * (the first is always `table`, resolved to an existing root before
+  * `body` runs) and a `body` that turns the root and the decoded
+  * arguments into rows of `resultSchema`. */
+private[sources] final case class SnapProcedureDef(
+    name: String,
+    description: String,
+    params: Seq[ProcedureParameter],
+    resultSchema: StructType,
+    body: (String, SnapProcedureDef.Args) => Seq[InternalRow])
 
-  override def name(): String = "branch"
-  override def description(): String =
-    "Cut a write-audit-publish branch at a graft snapshot table's head"
+private[sources] object SnapProcedureDef {
+  /** The decoded arguments, in parameter order. */
+  final class Args(values: IndexedSeq[Any]) {
+    def str(i: Int): String = values(i).asInstanceOf[String]
+    def int(i: Int): Int = values(i).asInstanceOf[Int]
+    def long(i: Int): Long = values(i).asInstanceOf[Long]
+  }
+}
 
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "branch"
-      override def description(): String =
-        BranchProcedure.this.description()
-      override def isDeterministic: Boolean = false
+/** Every catalog procedure, unbound and bound alike, is this one class
+  * over a [[SnapProcedureDef]] (arguments do not change the result
+  * shape, so binding returns the procedure itself): each argument is
+  * decoded once — a NULL refuses before any [[SnapshotStore]] call —
+  * the table resolves through [[SnapProcedures.existingRoot]], and the
+  * body's rows come back as one local scan. A new procedure is one
+  * entry in [[SnapProcedures.All]]. */
+private[sources] final class GraftSnapshotProcedure(warehouse: String,
+    d: SnapProcedureDef) extends UnboundProcedure with BoundProcedure {
 
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build(),
-        ProcedureParameter.in("name", StringType)
-          .comment("branch name").build())
+  override def name(): String = d.name
+  override def description(): String = d.description
+  override def bind(inputType: StructType): BoundProcedure = this
+  override def isDeterministic: Boolean = false // reads or commits live state
+  override def parameters(): Array[ProcedureParameter] = d.params.toArray
 
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val branchName = input.getUTF8String(1).toString
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        SnapProcedures.singleLongResult("snapshot_id",
-          SnapshotStore.branch(root, branchName).id)
+  override def call(input: InternalRow): util.Iterator[Scan] = {
+    val args = new SnapProcedureDef.Args(d.params.indices.map { i =>
+      val p = d.params(i)
+      if (input.isNullAt(i))
+        throw new IllegalArgumentException(
+          s"CALL system.${d.name}: argument '${p.name()}' must not be NULL")
+      p.dataType() match {
+        case StringType => input.getUTF8String(i).toString
+        case LongType => input.getLong(i)
+        case IntegerType => input.getInt(i)
       }
-    }
+    })
+    val root = SnapProcedures.existingRoot(warehouse, args.str(0))
+    // NOT named `rows`: inside the anonymous LocalScan that name
+    // resolves to the override itself — a self-tail-call scalac
+    // compiles into an infinite loop
+    val resultRows = d.body(root, args).toArray
+    util.Collections.singletonList[Scan](new LocalScan {
+      override def readSchema(): StructType = d.resultSchema
+      override def rows(): Array[InternalRow] = resultRows
+    }).iterator()
+  }
 }
 
-/** `CALL <catalog>.system.fast_forward(table, name)` — publish a WAP
-  * branch's staged state onto the main chain
-  * ([[SnapshotStore.fastForward]]): one ordinary conflict-checked
-  * commit; refuses loudly when main advanced since the fork. Returns
-  * the published manifest id. */
-class FastForwardProcedure(warehouse: String) extends UnboundProcedure {
-
-  override def name(): String = "fast_forward"
-  override def description(): String =
-    "Publish a WAP branch's staged state onto the main chain"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "fast_forward"
-      override def description(): String =
-        FastForwardProcedure.this.description()
-      override def isDeterministic: Boolean = false
-
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build(),
-        ProcedureParameter.in("name", StringType)
-          .comment("branch name to publish").build())
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val branchName = input.getUTF8String(1).toString
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        SnapProcedures.singleLongResult("snapshot_id",
-          SnapshotStore.fastForward(root, branchName))
-      }
-    }
-}
-
-/** `CALL <catalog>.system.drop_branch(table, name)` — drop a WAP
-  * branch ref; its unpublished manifests/dirs age out via expire.
-  * Returns whether the branch existed (0/1). */
-class DropBranchProcedure(warehouse: String) extends UnboundProcedure {
-
-  override def name(): String = "drop_branch"
-  override def description(): String =
-    "Drop a WAP branch from a graft snapshot table"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "drop_branch"
-      override def description(): String =
-        DropBranchProcedure.this.description()
-      override def isDeterministic: Boolean = false
-
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build(),
-        ProcedureParameter.in("name", StringType)
-          .comment("branch name to drop").build())
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val branchName = input.getUTF8String(1).toString
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        SnapProcedures.singleLongResult("existed",
-          if (SnapshotStore.dropBranch(root, branchName)) 1L else 0L)
-      }
-    }
-}
-
-/** `CALL <catalog>.system.expire(table, keep_last)` — retention from
-  * SQL: drop all but the newest `keep_last` commits and the data dirs
-  * no retained manifest references, through the same locked
-  * [[SnapshotStore.expire]] (hint repaired and fsync'd first, expired
-  * chain slots tombstoned, the live head always retained). The orphan
-  * grace is pinned CONSERVATIVELY to one hour — a SQL caller cannot
-  * see whether another HOST has a commit in flight (its data dirs look
-  * exactly like crash orphans until it publishes), and the Scala API's
-  * grace-0 default is only safe when this host's lock covers every
-  * writer; an operator who knows that holds can call
-  * `SnapshotStore.expire(root, keepLast, 0)` directly. Returns the
-  * retained commit count (chain slots, no parsing). */
-class ExpireProcedure(warehouse: String) extends UnboundProcedure {
-
-  /** See the class doc: longer than any sane commit's write→publish. */
-  private val SqlOrphanGraceMs = 3600000L
-
-  override def name(): String = "expire"
-  override def description(): String =
-    "Expire a graft snapshot table's history to the newest keep_last commits"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "expire"
-      override def description(): String = ExpireProcedure.this.description()
-      override def isDeterministic: Boolean = false
-
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build(),
-        ProcedureParameter.in("keep_last",
-          org.apache.spark.sql.types.IntegerType)
-          .comment("how many newest commits to retain (>= 1)").build())
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val keepLast = input.getInt(1)
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        SnapshotStore.expire(root, keepLast,
-          orphanGraceMs = SqlOrphanGraceMs)
-        // Degraded no-hard-link / pre-chain tables have no commit-*
-        // slots at all: reporting retained_commits = 0 for a table
-        // whose manifests WERE retained misreads as "expire destroyed
-        // everything". Count via history (which falls back to the
-        // manifests listing for exactly those tables).
-        val retained = SnapshotStore.retainedSeqs(root).size match {
-          case 0 => SnapshotStore.history(root).size
-          case n => n
-        }
-        SnapProcedures.singleLongResult("retained_commits",
-          retained.toLong)
-      }
-    }
-}
-
-/** `CALL <catalog>.system.rollback(table, to_seq)` — the Delta
-  * `RESTORE` analogue from SQL: publish the table's state at retained
-  * chain seq `to_seq` as a NEW head commit through the locked
-  * [[SnapshotStore.rollback]] (history stays append-only; the
-  * rolled-back commits remain time-travel-visible until expire; a
-  * target past the retention horizon fails loudly). Returns the
-  * committed snapshot id. */
-class RollbackProcedure(warehouse: String) extends UnboundProcedure {
-
-  override def name(): String = "rollback"
-  override def description(): String =
-    "Roll a graft snapshot table back to a retained commit (new head)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "rollback"
-      override def description(): String =
-        RollbackProcedure.this.description()
-      override def isDeterministic: Boolean = false
-
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build(),
-        ProcedureParameter.in("to_seq", LongType)
-          .comment("retained chain sequence to restore").build())
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val toSeq = input.getLong(1)
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        SnapProcedures.singleLongResult("snapshot_id",
-          SnapshotStore.rollback(root, toSeq))
-      }
-    }
-}
-
-/** `CALL <catalog>.system.tag(table, name, seq)` — name a committed
-  * state (the Iceberg tag): the tagged commit's manifest, chain slot
-  * and data dirs are pinned through every later
-  * `CALL system.expire`, and `VERSION AS OF '<name>'` resolves it.
-  * Tags are immutable — re-tagging a live name fails loudly. Returns
-  * the tagged snapshot id. */
-class TagProcedure(warehouse: String) extends UnboundProcedure {
-
-  override def name(): String = "tag"
-  override def description(): String =
-    "Pin and name a retained commit of a graft snapshot table"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "tag"
-      override def description(): String = TagProcedure.this.description()
-      override def isDeterministic: Boolean = false
-
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build(),
-        ProcedureParameter.in("name", StringType)
-          .comment("immutable tag name").build(),
-        ProcedureParameter.in("seq", LongType)
-          .comment("retained chain sequence to pin").build())
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val tagName = input.getUTF8String(1).toString
-        val seq = input.getLong(2)
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        SnapProcedures.singleLongResult("snapshot_id",
-          SnapshotStore.tag(root, tagName, seq))
-      }
-    }
-}
-
-/** `CALL <catalog>.system.tags(table)` — list the tags: one row per
-  * tag (name, pinned chain seq, manifest id), name order. The read
-  * side of the tag story — `system.tag`/`untag` write it. */
-class TagsProcedure(warehouse: String) extends UnboundProcedure {
-
-  override def name(): String = "tags"
-  override def description(): String =
-    "List a graft snapshot table's tags"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "tags"
-      override def description(): String =
-        TagsProcedure.this.description()
-      override def isDeterministic: Boolean = false
-
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build())
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        val resultSchema = StructType(Seq(
-          StructField("name", StringType, false),
-          StructField("seq", LongType, false),
-          StructField("snapshot_id", LongType, false)))
-        val tagRows = SnapshotStore.tags(root).toSeq.sortBy(_._1)
-          .map { case (n, ref) => InternalRow(
-            org.apache.spark.unsafe.types.UTF8String.fromString(n),
-            ref.seq, ref.id)
-          }.toArray
-        util.Collections.singletonList[Scan](new LocalScan {
-          override def readSchema(): StructType = resultSchema
-          override def rows(): Array[InternalRow] = tagRows
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.system.untag(table, name)` — drop a tag; the
-  * commit it named ages out via expire like any other. Returns whether
-  * the tag existed (0/1). */
-class UntagProcedure(warehouse: String) extends UnboundProcedure {
-
-  override def name(): String = "untag"
-  override def description(): String =
-    "Remove a tag from a graft snapshot table"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "untag"
-      override def description(): String =
-        UntagProcedure.this.description()
-      override def isDeterministic: Boolean = false
-
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build(),
-        ProcedureParameter.in("name", StringType)
-          .comment("tag name to remove").build())
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val tagName = input.getUTF8String(1).toString
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        SnapProcedures.singleLongResult("existed",
-          if (SnapshotStore.untag(root, tagName)) 1L else 0L)
-      }
-    }
-}
-
-/** `CALL <catalog>.system.compact(table)` — compaction from SQL: fold
-  * a table's accumulated append parts back to one dir per partition as
-  * a normal snapshot commit ([[SnapshotStore.compact]], layout from
-  * the manifest props) — readers on the old manifest untouched.
-  * Returns the committed snapshot id. */
-class CompactProcedure(warehouse: String) extends UnboundProcedure {
-
-  override def name(): String = "compact"
-  override def description(): String =
-    "Compact a graft snapshot table to one dir per partition"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "compact"
-      override def description(): String = CompactProcedure.this.description()
-      override def isDeterministic: Boolean = false
-
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build())
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val spark = SparkSession.active
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        val (partCol, sortCol) =
-          SnapProcedures.layoutOf(root, table, "SQL compaction")
-        val id = SnapshotStore.compact(spark, root, partCol, sortCol)
-        SnapProcedures.singleLongResult("snapshot_id", id)
-      }
-    }
-}
-
-/** `CALL <catalog>.system.rewrite_data_files(table, target_file_bytes)`
-  * — targeted maintenance ([[SnapshotStore.rewriteDataFiles]], the
-  * Iceberg procedure of the same name): restates ONLY dirty entries
-  * (multi-part values, live deletion vectors, outgoing spec vintages,
-  * file counts far off the binpack ideal) and carries everything else
-  * by reference — O(dirty data), not O(table). Returns the committed
-  * snapshot id; a fully-clean table returns the unchanged head id
-  * without committing. */
-class RewriteDataFilesProcedure(warehouse: String) extends UnboundProcedure {
-
-  override def name(): String = "rewrite_data_files"
-  override def description(): String =
-    "Binpack-rewrite a graft snapshot table's dirty entries only"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "rewrite_data_files"
-      override def description(): String =
-        RewriteDataFilesProcedure.this.description()
-      override def isDeterministic: Boolean = false
-
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build(),
-        ProcedureParameter.in("target_file_bytes", LongType)
-          .comment("binpack file-size target in bytes").build())
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val target = input.getLong(1)
-        val spark = SparkSession.active
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        SnapProcedures.singleLongResult("snapshot_id",
-          SnapshotStore.rewriteDataFiles(spark, root,
-            targetFileBytes = target))
-      }
-    }
-}
-
-/** `CALL <catalog>.system.history(table)` — the DESCRIBE HISTORY
-  * analogue: one row per RETAINED commit (chain seq, manifest id,
-  * partition-entry count, total rows when every entry carries
-  * write-time stats), commit order ascending. Expired commits are
-  * absent, exactly like time travel. */
-class HistoryProcedure(warehouse: String) extends UnboundProcedure {
-
-  override def name(): String = "history"
-  override def description(): String =
-    "Retained commit history of a graft snapshot table"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "history"
-      override def description(): String = HistoryProcedure.this.description()
-      override def isDeterministic: Boolean = false // reads live state
-
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build())
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        val resultSchema = StructType(Seq(
-          StructField("seq", LongType, false),
-          StructField("snapshot_id", LongType, false),
-          StructField("entries", org.apache.spark.sql.types.IntegerType,
-            false),
-          StructField("total_rows", LongType, true),
-          // the commit wall time (micros) — the instants TIMESTAMP AS
-          // OF can address; null on pre-stamping manifests
-          StructField("commit_ts",
-            org.apache.spark.sql.types.TimestampType, true)))
-        // NOT named `rows`: inside the anonymous LocalScan that name
-        // resolves to the override itself — a self-tail-call scalac
-        // compiles into an infinite loop
-        val historyRows = SnapshotStore.history(root).map { h =>
-          InternalRow(h.seq, h.id, h.entries,
-            h.rows.map(Long.box).orNull,
-            h.ts.map(t => Long.box(t * 1000L)).orNull)
-        }.toArray
-        util.Collections.singletonList[Scan](new LocalScan {
-          override def readSchema(): StructType = resultSchema
-          override def rows(): Array[InternalRow] = historyRows
-        }).iterator()
-      }
-    }
-}
-
-/** Shared plumbing for the catalog's CALL procedures: table-name →
-  * root resolution (ONE definition — quoting/namespace changes must
-  * not silently diverge across procedures), existence/layout checks,
-  * and the single-row result scan. */
+/** The catalog's CALL procedures as one ordered table, plus their
+  * shared plumbing: table-name → root resolution (ONE definition —
+  * quoting/namespace changes must not silently diverge across
+  * procedures) and the existence/layout checks. */
 private[sources] object SnapProcedures {
-  def root(warehouse: String, table: String): String =
-    (warehouse +: table.split('.').toSeq).mkString("/")
+  import org.apache.spark.sql.types.{DataType, TimestampType}
 
   def existingRoot(warehouse: String, table: String): String = {
-    val r = root(warehouse, table)
+    val r = (warehouse +: table.split('.').toSeq).mkString("/")
     if (SnapshotStore.current(r).isEmpty)
       throw new IllegalStateException(
         s"no snapshot table '$table' under $warehouse")
@@ -2174,64 +1752,182 @@ private[sources] object SnapProcedures {
         s"snapshot table '$table' predates layout-recording manifests " +
           s"— recommit with SnapshotStore.write to enable $what"))
 
-  def singleLongResult(name: String, value: Long): util.Iterator[Scan] = {
-    val resultSchema =
-      StructType(Seq(StructField(name, LongType, false)))
-    util.Collections.singletonList[Scan](new LocalScan {
-      override def readSchema(): StructType = resultSchema
-      override def rows(): Array[InternalRow] = Array(InternalRow(value))
-    }).iterator()
-  }
-}
+  private def in(name: String, t: DataType,
+      comment: String): ProcedureParameter =
+    ProcedureParameter.in(name, t).comment(comment).build()
 
-/** `CALL <catalog>.system.merge_into(table, source, key, delete_flag)`
-  * — the SQL entry to [[graft.operators.MergeInto.mergeCommit]]: apply
-  * the rows of temp view / table `source` (base columns + boolean
-  * `delete_flag`) to snapshot table `table` as one atomic copy-on-write
-  * commit under the table lock, with manifest-stats partition pruning.
-  * Partition/sort layout comes from the manifest props, so SQL callers
-  * never re-state it. Returns one row: the committed snapshot id.
-  *
-  * This is the documented CALL-style MERGE entry (the full
-  * SupportsRowLevelOperations surface — rewriting Spark's MERGE INTO
-  * plan — buys positional-clause syntax but routes through the exact
-  * same commit); reference analogue: the SQL INSERT loop the reference
-  * drives through ClickHouse (README.md:527-532). */
-class MergeIntoProcedure(warehouse: String) extends UnboundProcedure {
+  private val TableParam = in("table", StringType,
+    "snapshot table name relative to the warehouse")
 
-  override def name(): String = "merge_into"
-  override def description(): String =
-    "Atomic copy-on-write MERGE into a graft snapshot table"
+  private def longResult(name: String): StructType =
+    StructType(Seq(StructField(name, LongType, false)))
 
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "merge_into"
-      override def description(): String = MergeIntoProcedure.this.description()
-      override def isDeterministic: Boolean = false // commits a snapshot
+  private def one(v: Long): Seq[InternalRow] = Seq(InternalRow(v))
 
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType)
-          .comment("snapshot table name relative to the warehouse").build(),
-        ProcedureParameter.in("source", StringType)
-          .comment("view/table holding the changeset: base columns + " +
-            "boolean delete flag").build(),
-        ProcedureParameter.in("key", StringType)
-          .comment("unique merge key column").build(),
-        ProcedureParameter.in("delete_flag", StringType)
-          .comment("boolean column marking delete rows").build())
+  private def flag(b: Boolean): Seq[InternalRow] = one(if (b) 1L else 0L)
 
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val source = input.getUTF8String(1).toString
-        val key = input.getUTF8String(2).toString
-        val deleteFlag = input.getUTF8String(3).toString
+  /** Listing order; also the order of the unknown-procedure message. */
+  val All: Seq[SnapProcedureDef] = Seq(
+    // the SQL entry to graft.operators.MergeInto.mergeCommit: apply the
+    // rows of temp view / table `source` (base columns + boolean
+    // `delete_flag`) as one atomic copy-on-write commit under the table
+    // lock, with manifest-stats partition pruning; layout comes from
+    // the manifest props, so SQL callers never re-state it. The
+    // documented CALL-style MERGE entry (the full
+    // SupportsRowLevelOperations surface — rewriting Spark's MERGE INTO
+    // plan — buys positional-clause syntax but routes through the exact
+    // same commit); reference analogue: the SQL INSERT loop the
+    // reference drives through ClickHouse (README.md:527-532)
+    SnapProcedureDef("merge_into",
+      "Atomic copy-on-write MERGE into a graft snapshot table",
+      Seq(TableParam,
+        in("source", StringType, "view/table holding the changeset: " +
+          "base columns + boolean delete flag"),
+        in("key", StringType, "unique merge key column"),
+        in("delete_flag", StringType, "boolean column marking delete rows")),
+      longResult("snapshot_id"),
+      (root, a) => {
         val spark = SparkSession.active
-        val root = SnapProcedures.existingRoot(warehouse, table)
-        val (partCol, sortCol) =
-          SnapProcedures.layoutOf(root, table, "SQL MERGE")
-        val id = graft.operators.MergeInto.mergeCommit(spark, root,
-          spark.table(source), key, deleteFlag, partCol, sortCol)
-        SnapProcedures.singleLongResult("snapshot_id", id)
-      }
-    }
+        val (partCol, sortCol) = layoutOf(root, a.str(0), "SQL MERGE")
+        one(graft.operators.MergeInto.mergeCommit(spark, root,
+          spark.table(a.str(1)), a.str(2), a.str(3), partCol, sortCol))
+      }),
+    // the DESCRIBE HISTORY analogue: one row per RETAINED commit,
+    // commit order ascending; expired commits are absent, exactly like
+    // time travel. total_rows is null unless every entry carries
+    // write-time stats
+    SnapProcedureDef("history",
+      "Retained commit history of a graft snapshot table",
+      Seq(TableParam),
+      StructType(Seq(
+        StructField("seq", LongType, false),
+        StructField("snapshot_id", LongType, false),
+        StructField("entries", IntegerType, false),
+        StructField("total_rows", LongType, true),
+        // the commit wall time (micros) — the instants TIMESTAMP AS OF
+        // can address; null on pre-stamping manifests
+        StructField("commit_ts", TimestampType, true))),
+      (root, _) => SnapshotStore.history(root).map { h =>
+        InternalRow(h.seq, h.id, h.entries, h.rows.map(Long.box).orNull,
+          h.ts.map(t => Long.box(t * 1000L)).orNull)
+      }),
+    // retention: drop all but the newest `keep_last` commits and the
+    // data dirs no retained manifest references, through the locked
+    // SnapshotStore.expire. The orphan grace is pinned CONSERVATIVELY
+    // to one hour, longer than any sane commit's write→publish — a SQL
+    // caller cannot see whether another HOST has a commit in flight
+    // (its data dirs look exactly like crash orphans until it
+    // publishes), and the Scala API's grace-0 default is only safe when
+    // this host's lock covers every writer; an operator who knows that
+    // holds can call `SnapshotStore.expire(root, keepLast, 0)` directly
+    SnapProcedureDef("expire",
+      "Expire a graft snapshot table's history to the newest keep_last " +
+        "commits",
+      Seq(TableParam, in("keep_last", IntegerType,
+        "how many newest commits to retain (>= 1)")),
+      longResult("retained_commits"),
+      (root, a) => {
+        SnapshotStore.expire(root, a.int(1), orphanGraceMs = 3600000L)
+        // Degraded no-hard-link / pre-chain tables have no commit-*
+        // slots at all: reporting retained_commits = 0 for a table
+        // whose manifests WERE retained misreads as "expire destroyed
+        // everything". Count via history (which falls back to the
+        // manifests listing for exactly those tables).
+        one(SnapshotStore.retainedSeqs(root).size match {
+          case 0 => SnapshotStore.history(root).size
+          case n => n
+        })
+      }),
+    // fold accumulated append parts back to one dir per partition as a
+    // normal snapshot commit (layout from the manifest props) — readers
+    // on the old manifest untouched
+    SnapProcedureDef("compact",
+      "Compact a graft snapshot table to one dir per partition",
+      Seq(TableParam), longResult("snapshot_id"),
+      (root, a) => {
+        val (partCol, sortCol) = layoutOf(root, a.str(0), "SQL compaction")
+        one(SnapshotStore.compact(SparkSession.active, root, partCol,
+          sortCol))
+      }),
+    // targeted maintenance (the Iceberg procedure of the same name):
+    // restates ONLY dirty entries (multi-part values, live deletion
+    // vectors, outgoing spec vintages, file counts far off the binpack
+    // ideal) and carries everything else by reference — O(dirty data),
+    // not O(table). A fully-clean table returns the unchanged head id
+    // without committing
+    SnapProcedureDef("rewrite_data_files",
+      "Binpack-rewrite a graft snapshot table's dirty entries only",
+      Seq(TableParam, in("target_file_bytes", LongType,
+        "binpack file-size target in bytes")),
+      longResult("snapshot_id"),
+      (root, a) => one(SnapshotStore.rewriteDataFiles(SparkSession.active,
+        root, targetFileBytes = a.long(1)))),
+    // the Delta RESTORE analogue: publish the state at retained chain
+    // seq `to_seq` as a NEW head commit (history stays append-only; the
+    // rolled-back commits remain time-travel-visible until expire; a
+    // target past the retention horizon fails loudly)
+    SnapProcedureDef("rollback",
+      "Roll a graft snapshot table back to a retained commit (new head)",
+      Seq(TableParam, in("to_seq", LongType,
+        "retained chain sequence to restore")),
+      longResult("snapshot_id"),
+      (root, a) => one(SnapshotStore.rollback(root, a.long(1)))),
+    // the Iceberg tag: the tagged commit's manifest, chain slot and
+    // data dirs are pinned through every later expire, and
+    // VERSION AS OF '<name>' resolves it; re-tagging a live name fails
+    SnapProcedureDef("tag",
+      "Pin and name a retained commit of a graft snapshot table",
+      Seq(TableParam, in("name", StringType, "immutable tag name"),
+        in("seq", LongType, "retained chain sequence to pin")),
+      longResult("snapshot_id"),
+      (root, a) => one(SnapshotStore.tag(root, a.str(1), a.long(2)))),
+    // the commit a dropped tag named ages out via expire like any other
+    SnapProcedureDef("untag", "Remove a tag from a graft snapshot table",
+      Seq(TableParam, in("name", StringType, "tag name to remove")),
+      longResult("existed"),
+      (root, a) => flag(SnapshotStore.untag(root, a.str(1)))),
+    // one row per tag, name order
+    SnapProcedureDef("tags", "List a graft snapshot table's tags",
+      Seq(TableParam),
+      StructType(Seq(
+        StructField("name", StringType, false),
+        StructField("seq", LongType, false),
+        StructField("snapshot_id", LongType, false))),
+      (root, _) => SnapshotStore.tags(root).toSeq.sortBy(_._1).map {
+        case (n, ref) => InternalRow(
+          org.apache.spark.unsafe.types.UTF8String.fromString(n),
+          ref.seq, ref.id)
+      }),
+    // Iceberg-style partition-spec evolution: a metadata-only commit —
+    // existing entries keep (and record) their outgoing spec, new
+    // commits land under the new one, row-level DML migrates touched
+    // partitions
+    SnapProcedureDef("evolve_spec",
+      "Evolve a graft snapshot table's partition spec for future commits",
+      Seq(TableParam, in("new_spec", StringType,
+        "new partition spec, e.g. 'month,bucket(4,id)'")),
+      longResult("snapshot_id"),
+      (root, a) => one(SnapshotStore.evolvePartitionSpec(root, a.str(1)))),
+    // a WAP branch cut at the head: staged commits land on the branch
+    // (Scala appendToBranch / resetBranch; read with
+    // option("branch", name)), invisible to main readers until
+    // fast_forward publishes them. Returns the fork's manifest id
+    SnapProcedureDef("branch",
+      "Cut a write-audit-publish branch at a graft snapshot table's head",
+      Seq(TableParam, in("name", StringType, "branch name")),
+      longResult("snapshot_id"),
+      (root, a) => one(SnapshotStore.branch(root, a.str(1)).id)),
+    // one ordinary conflict-checked commit; refuses loudly when main
+    // advanced since the fork
+    SnapProcedureDef("fast_forward",
+      "Publish a WAP branch's staged state onto the main chain",
+      Seq(TableParam, in("name", StringType, "branch name to publish")),
+      longResult("snapshot_id"),
+      (root, a) => one(SnapshotStore.fastForward(root, a.str(1)))),
+    // the branch's unpublished manifests/dirs age out via expire
+    SnapProcedureDef("drop_branch",
+      "Drop a WAP branch from a graft snapshot table",
+      Seq(TableParam, in("name", StringType, "branch name to drop")),
+      longResult("existed"),
+      (root, a) => flag(SnapshotStore.dropBranch(root, a.str(1)))))
 }

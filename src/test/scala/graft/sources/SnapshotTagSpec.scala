@@ -53,6 +53,7 @@ class SnapshotTagSpec extends SparkSpec {
     // resolved to the wrong snapshot at read
     intercept[IllegalArgumentException](SnapshotStore.tag(root, "7", 1))
     intercept[IllegalStateException](SnapshotStore.tag(root, "ok", 99))
+    intercept[IllegalArgumentException](SnapshotStore.tag(root, "ok", 0))
     // retention: keep only the head — but the tag pins seq 1
     SnapshotStore.expire(root, keepLast = 1)
     assert(spark.sql("SELECT count(*) FROM snaptag.t VERSION AS OF " +
