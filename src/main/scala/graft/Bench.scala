@@ -177,7 +177,7 @@ object Bench {
     // O(overlapping slices), the finest skipping grain in the engine
     "snapshot_file_prune")
 
-  private def time[A](f: => A): Double = {
+  private[graft] def time[A](f: => A): Double = {
     val t0 = System.nanoTime()
     f
     (System.nanoTime() - t0) / 1e9
@@ -186,10 +186,10 @@ object Bench {
   /** Execute the full plan without collecting rows to the driver beyond
     * the aggregate result: count() on a cached-nothing plan would let
     * Catalyst prune work, so materialize via a no-op foreach instead. */
-  private def run(df: DataFrame): Unit =
+  private[graft] def run(df: DataFrame): Unit =
     df.queryExecution.toRdd.foreach(_ => ())
 
-  private def median(xs: Seq[Double]): Double = {
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.size
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
@@ -200,31 +200,40 @@ object Bench {
     math.sqrt(xs.map(x => (x - m) * (x - m)).sum / xs.size)
   }
 
-  private def fmt(v: Double): String = String.format(Locale.ROOT, "%.4f", v)
+  private[graft] def fmt(v: Double): String = String.format(Locale.ROOT, "%.4f", v)
 
   /** Bench lanes resolve from the full registry: oracle-swept lanes
     * plus the spec-pinned production-hash lanes (e.g. dedup_minhash). */
   private def benchQuery(name: String) = SparkEntry.allQueries.get(name)
 
-  /** Measure one query: `repeats` runs, then while the spread looks
-    * contaminated (max/min > 3×) take extra runs, up to 2×`repeats` more.
+  /** One timed run of `f`, then the UNTIMED sweep of every pinned
+    * checkpoint block (see main), so no sample pays for its
+    * predecessors' leftovers. */
+  private[graft] def timedRun(spark: SparkSession)(f: => Unit): Double = {
+    val t = time(f)
+    graft.util.Checkpoints.releaseAllAndGc(spark)
+    t
+  }
+
+  /** Measure one query: `repeats` samples (each evaluation of `sample`
+    * is one run's seconds), then while the spread looks contaminated
+    * (max/min > 3×) take extra samples, up to 2×`repeats` more.
     * The reported median/stddev are computed over the HEALTHY samples
     * only — those within 3× of the minimum. The workload is
     * deterministic, so on an idle host every run costs the same; the
     * minimum is the cleanest estimate of true plan cost and anything 3×
     * above it is the host's documented intermittent stall, not the
     * query. All raw samples are still logged to stderr for audit.
-    * `after` runs UNTIMED after every sample — the harness passes the
-    * checkpoint-block sweep there (see main). Returns
-    * (median, stddev, all samples). */
-  private def measure(repeats: Int, f: => Unit,
-      after: => Unit): (Double, Double, Seq[Double]) = {
-    def sample(): Double = { val t = time(f); after; t }
-    var times = (1 to repeats).map(_ => sample())
+    * Returns (median, stddev, all samples). */
+  private[graft] def measure(repeats: Int)(
+      sample: => Double): (Double, Double, Seq[Double]) = {
+    require(repeats >= 1,
+      s"repeats must be at least 1 (SPARK_GRAFT_REPEATS), got $repeats")
+    var times = (1 to repeats).map(_ => sample)
     def healthy = times.filter(_ <= math.max(times.min, 1e-9) * 3.0)
     var extra = 0
     while (healthy.size < repeats && extra < 2 * repeats) {
-      times :+= sample()
+      times :+= sample
       extra += 1
     }
     // sub-second lanes sit on the ~0.1-0.4 s scheduling floor, where a
@@ -246,30 +255,20 @@ object Bench {
       else if (median(healthy) < 2.0) math.ceil(repeats * 1.5).toInt
       else repeats
     while (healthy.size < target && times.size < target + 2 * repeats)
-      times :+= sample()
+      times :+= sample
     val h = healthy
     (median(h), stddev(h), times)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warmups = sys.env.getOrElse("SPARK_GRAFT_WARMUPS", "1").toInt
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "5").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
     // local-dev override: bench only the named queries
     val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
 
     val results = headline
       .filter(n => only.forall(_.contains(n)))
@@ -287,9 +286,8 @@ object Bench {
             (1 to warmups).foreach { _ =>
               run(fn(spark, sfDir)); graft.util.Checkpoints.releaseAllAndGc(spark)
             }
-            val (med, sd, samples) = measure(repeats,
-              run(fn(spark, sfDir)),
-              graft.util.Checkpoints.releaseAllAndGc(spark))
+            val (med, sd, samples) =
+              measure(repeats)(timedRun(spark)(run(fn(spark, sfDir))))
             System.err.println(s"[bench] $name median=${fmt(med)}s " +
               s"sd=${fmt(sd)} samples=${samples.map(fmt).mkString(",")}")
             (name, med, sd)

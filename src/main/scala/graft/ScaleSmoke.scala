@@ -1,9 +1,8 @@
 package graft
 
-import java.util.Locale
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import Bench.fmt
 
 /** Scaling-evidence harness: runs the four reference benchmark
   * aggregations against the base fact table and against a K×-enlarged
@@ -23,11 +22,12 @@ import org.apache.spark.sql.functions._
   * healthy. A ratio ≫ K would flag a superlinear stage (the thing
   * this harness exists to catch).
   *
-  * Measurement discipline matches [[Bench]]: 1 warmup + 5 measured
-  * runs per (query, size), median over the healthy samples (within 3×
-  * of the minimum — the host has documented intermittent stalls), and
-  * ALL pinned checkpoint blocks released after every sample so lanes
-  * can't contaminate each other across the sweep.
+  * Measurement is [[Bench.measure]] itself: 1 warmup, then 5 measured
+  * runs per (query, size) with its stall retakes and sample ladder,
+  * median over the healthy samples (within 3× of the minimum — the
+  * host has documented intermittent stalls), and ALL pinned checkpoint
+  * blocks released after every sample so lanes can't contaminate each
+  * other across the sweep.
   */
 object ScaleSmoke {
 
@@ -233,53 +233,21 @@ object ScaleSmoke {
       "snapshot_agg_group", "snapshot_agg_filtered",
       "snapshot_rewrite_files", "snapshot_file_prune")
 
-  private def fmt(v: Double): String = String.format(Locale.ROOT, "%.3f", v)
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    val n = s.size
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-  }
-
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  /** 5 samples, untimed block sweep after each, median of the samples
-    * within 3× of the minimum (the Bench healthy-sample policy). */
-  private def measure(spark: SparkSession, f: => Unit): Double = {
-    val times = (1 to 5).map { _ =>
-      val t = time(f)
-      graft.util.Checkpoints.releaseAllAndGc(spark)
-      t
-    }
-    median(times.filter(_ <= math.max(times.min, 1e-9) * 3.0))
-  }
-
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.envCpus
     // local-dev override: smoke only the named lanes (e.g. the headline
     // four at a K too large to rebuild every corpus-bound lane for)
     val only = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .appName("graft-scale-smoke")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     val big = s"${sys.props("java.io.tmpdir")}/graft_scale_${k}x_${base.hashCode.toHexString}"
     if (!new java.io.File(s"$big/lineitem.parquet").exists()) {
       val li = Tables.lineitem(spark, base)
       (1 to k).map(_ => li).reduce(_ unionAll _)
-        .repartition(cpus.toInt * 2)
+        .repartition(cpus * 2)
         .write.mode("overwrite").parquet(s"$big/lineitem.parquet")
     }
     if (!new java.io.File(s"$big/documents.parquet").exists()) {
@@ -290,7 +258,7 @@ object ScaleSmoke {
       (0 until k).map(i => docs.withColumn("doc_id",
           col("doc_id") + lit(i.toLong * 100000000L)))
         .reduce(_ unionAll _)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$big/documents.parquet")
     }
     if (!new java.io.File(s"$big/embeddings.parquet").exists()) {
@@ -300,7 +268,7 @@ object ScaleSmoke {
       (0 until k).map(i => embs.withColumn("vec_id",
           col("vec_id") + lit(i.toLong * 100000000L)))
         .reduce(_ unionAll _)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$big/embeddings.parquet")
     }
     if (!new java.io.File(s"$big/orders.parquet").exists()) {
@@ -310,7 +278,7 @@ object ScaleSmoke {
       // not of the operator — while k× lineitem against 1× orders
       // scales the join linearly as intended.
       Tables.orders(spark, base)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$big/orders.parquet")
     }
     if (!new java.io.File(s"$big/events.parquet").exists()) {
@@ -323,7 +291,7 @@ object ScaleSmoke {
           .withColumn("user_id", col("user_id") + lit(i.toLong * 1000000000L))
           .withColumn("event_id", col("event_id") + lit(i.toLong * 1000000000L)))
         .reduce(_ unionAll _)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$big/events.parquet")
     }
     // q7's dimension tables ride along at 1× (the fact side is what
@@ -346,7 +314,7 @@ object ScaleSmoke {
       (0 until k).map(i => o.withColumn("o_orderkey",
           col("o_orderkey") + lit(i.toLong * 10000000000L)))
         .reduce(_ unionAll _)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$bigSnap/orders.parquet")
     }
     val nBase = Tables.lineitem(spark, base).count()
@@ -357,11 +325,10 @@ object ScaleSmoke {
       s"documents base=$dBase, ${k}x=$dBig")
 
     def run(q: String, dir: String): Double = {
-      val f = () => SparkEntry.allQueries(q)(spark, dir)
-        .queryExecution.toRdd.foreach(_ => ())
-      f() // warmup
-      graft.util.Checkpoints.releaseAllAndGc(spark)
-      measure(spark, f())
+      val sample = () =>
+        Bench.timedRun(spark)(Bench.run(SparkEntry.allQueries(q)(spark, dir)))
+      sample() // warmup
+      Bench.measure(5)(sample())._1
     }
     val rows = queries.filter(q => only.forall(_.contains(q))).map { q =>
       val (b, g) = (run(q, base),

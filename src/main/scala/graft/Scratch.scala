@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local-dev plan/timing probe (not part of the library surface):
   *   sbt "runMain graft.Scratch <query>..."
   * Data dir from SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
   * threads from SPARK_GRAFT_CPUS — the same env contract as Bench. */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
+    val spark = GraftSession.local(GraftSession.envCpus)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for (name <- args) {
       val df = SparkEntry.allQueries(name)(spark, d)

@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** Worker process for the REAL multi-process commit stress
   * (`CrossProcessChainSpec`): a separate JVM — its own SparkSession,
   * its own file locks, nothing shared with the test JVM but the table
@@ -19,14 +17,7 @@ import org.apache.spark.sql.SparkSession
 object ChainStressWorker {
   def main(args: Array[String]): Unit = {
     val Array(root, workerId, nBatches) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-chain-stress-$workerId")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(2)
     import spark.implicits._
     try {
       for (b <- 0 until nBatches.toInt) {

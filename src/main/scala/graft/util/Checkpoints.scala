@@ -28,6 +28,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * context's persistent-RDD registry around the checkpoint call, which
   * assumes no concurrent checkpointing on the same context — true for
   * the operators here (single driver thread per job chain).
+  *
+  * Availability trade: a local checkpoint keeps its blocks only in the
+  * executor that computed them and cuts the lineage behind them, so
+  * nothing can recompute a lost block. When an executor holding pinned
+  * blocks dies, every job reading that frame FAILS with a missing-block
+  * error instead of recomputing; the unit of work must be rerun from
+  * source. That buys lineage-free iteration with no replicated or
+  * reliable-storage write. On a `local[N]` master the driver is the
+  * only executor, so a lost executor is a lost JVM and the trade costs
+  * nothing; on a cluster one lost executor fails the job (MERGE's
+  * `graft.merge.materialize=reliable` replicates instead, see
+  * [[graft.operators.MergeInto]]).
   */
 object Checkpoints {
 

@@ -1,22 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends SparkSpec {
 
   test("cosine_similarity callable from pure SQL via extensions") {
-    // getOrCreate would return another suite's extension-less session;
-    // clear the default so the builder actually applies the extensions.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("ext-spec")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
+    withExtensionSession { spark =>
       val r = spark.sql(
         """SELECT cosine_similarity(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c1,
           |       cosine_similarity(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS c2
@@ -71,11 +58,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
         aLeft.toDF, aRight.toDF, "id", "id", "t", "t", Seq("v"))
       assert(asof.queryExecution.executedPlan.toString.contains("AsOfJoin"))
       assert(asof.count() === 3L)
-    } finally {
-      // do NOT spark.stop(): the SparkContext is shared JVM-wide with
-      // the other suites; just detach this session from the registry.
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
   }
 }

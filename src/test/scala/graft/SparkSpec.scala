@@ -3,22 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for suites (one per suite, lazy). Built
-  * WITH [[graft.GraftExtensions]], exactly like the production
-  * Verify/Bench sessions — the MERGE INTO statement rewrite and the
-  * SQL function registrations are part of the engine's session
-  * contract, so specs must run under them. (Extensions apply at
-  * CREATION; every suite shares one builder, so the first suite in
-  * the JVM fixes them for all.) */
+/** Shared local SparkSession for suites (one per suite, lazy), built
+  * by [[graft.GraftSession]] exactly like the production Verify/Bench
+  * sessions — the MERGE INTO statement rewrite and the SQL function
+  * registrations are part of the engine's session contract, so specs
+  * must run under them. (Extensions apply at CREATION; every suite
+  * shares one builder, so the first suite in the JVM fixes them for
+  * all.) Fixed at `local[4]` whatever the host, so plan shapes the
+  * specs assert do not depend on the core count. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .withExtensions(new graft.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
@@ -28,16 +22,12 @@ trait SparkSpec extends AnyFunSuite {
     * never leaks into later suites in the same JVM. The new session is
     * deliberately not stopped — that would kill the shared
     * SparkContext. */
-  def withExtensionSession(name: String)(f: SparkSession => Unit): Unit = {
+  def withExtensionSession(f: SparkSession => Unit): Unit = {
     val prevActive = SparkSession.getActiveSession
     val prevDefault = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[2]").appName(name)
-      .config("spark.sql.shuffle.partitions", "2")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
+    val s2 = GraftSession.local(4)
     try f(s2)
     finally {
       SparkSession.clearActiveSession()

@@ -37,7 +37,7 @@ class BoundedTopKSpec extends SparkSpec {
   }
 
   test("SQL registration: bounded_topk and its arity/literal gates") {
-    withExtensionSession("btk-sql") { s2 =>
+    withExtensionSession { s2 =>
       import s2.implicits._
       Seq(("a", 5L), ("a", 1L), ("a", 9L)).toDF("g", "v")
         .createOrReplaceTempView("t")

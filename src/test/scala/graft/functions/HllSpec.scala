@@ -106,7 +106,7 @@ class HllSpec extends SparkSpec {
   }
 
   test("SQL registration: hll over a non-string key") {
-    withExtensionSession("hll-sql") { s2 =>
+    withExtensionSession { s2 =>
       s2.range(100).createOrReplaceTempView("t")
       try {
         val regs = s2.sql("SELECT hll(id, 8) AS r FROM t")

@@ -36,7 +36,7 @@ class NGramExplodeSpec extends SparkSpec {
   }
 
   test("SQL registration: ngram_explode works in plain SQL") {
-    withExtensionSession("ngram-sql") { s2 =>
+    withExtensionSession { s2 =>
       import s2.implicits._
       Seq((1L, "the quick brown fox")).toDF("id", "text")
         .createOrReplaceTempView("t")
