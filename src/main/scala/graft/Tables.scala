@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 /** Loaders for the driver-provided TPC-H-ish parquet tables (TESTDATA.md).
   *
   * Design-for-scale notes (100 TB target):
-  *   - Always `spark.read.parquet` with the schema already in the footer —
-  *     no inference pass (SURVEY.md §1.2; reference declares all schemas,
-  *     /root/reference/README.md:448-506).
+  *   - Every table opens through [[graft.util.ParquetOpen.read]]: the
+  *     schema comes from the file's footer, read on the driver, so an
+  *     open launches no Spark job (plain `spark.read.parquet` runs a
+  *     one-task schema-inference job per open; SURVEY.md §1.2; the
+  *     reference declares all schemas, README.md:448-506).
   *   - Column pruning + predicate pushdown are preserved by returning the
   *     raw scan and letting callers select/filter declaratively.
   *   - `events.ts` is written as parquet TIMESTAMP(NANOS), which Spark's
@@ -54,7 +56,7 @@ object Tables {
       // unless read as Long (then converted to micros by normalizeEventTs).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     }
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = graft.util.ParquetOpen.read(spark, s"$sfDir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
   }
 

@@ -36,7 +36,7 @@ object MergeTreeWriter {
       .parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.util.ParquetOpen.read(spark, path)
 
   /** Idempotent partition backfill — the Spark analogue of the
     * standard MergeTree operational pattern for restating a month

@@ -1301,13 +1301,11 @@ object SnapshotStore {
       val acc = freshAcc(statCols.toSeq)
       val perFile = scala.collection.mutable.ArrayBuffer[FileStats]()
       files.foreach { file =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(file.getPath), conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         var frows = 0L
         val facc = freshAcc(fileCols.toSeq)
-        try {
-          reader.getFooter.getBlocks.forEach { block =>
+        graft.util.ParquetOpen.footer(conf,
+            new org.apache.hadoop.fs.Path(file.getPath))
+          .getBlocks.forEach { block =>
             rows += block.getRowCount
             frows += block.getRowCount
             val byName = new java.util.HashMap[String,
@@ -1316,7 +1314,6 @@ object SnapshotStore {
             foldBlock(acc, byName)
             if (fileCols.nonEmpty) foldBlock(facc, byName)
           }
-        } finally reader.close()
         if (fileCols.nonEmpty)
           perFile += FileStats(file.getName, frows, collectCols(facc))
       }
@@ -3501,7 +3498,7 @@ object SnapshotStore {
         // the manifest, no per-file footer merge (mergeSchema would read
         // every footer; at 100 TB that is a listing-scale job of its own)
         case Some(s) => spark.read.schema(s).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
+        case None => graft.util.ParquetOpen.read(spark, paths: _*)
       }
     }
   }

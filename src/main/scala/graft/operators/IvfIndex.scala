@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
+import graft.util.ParquetOpen
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -60,8 +61,8 @@ object IvfIndex {
     * (int). */
   def read(spark: SparkSession, path: String): Index =
     Index(
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/assigned"))
+      ParquetOpen.read(spark, s"$path/centroids"),
+      ParquetOpen.read(spark, s"$path/assigned"))
 
   /** Top-k cosine search over the nProbe nearest cells per probe. */
   def search(index: Index, probes: DataFrame, idCol: String,

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.etl.{BucketedTables, CsvExport, MergeTreeWriter, RawCsvSource, SnapshotStore, ZOrderLayout}
+import graft.util.ParquetOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -107,7 +108,7 @@ object EtlQueries {
     val o = Tables.orders(s, d).select(col("o_orderkey"),
       col("o_custkey"), floor(col("o_totalprice")).cast("long").as("price_l"))
     ZOrderLayout.writeZOrdered(o, "o_custkey", "price_l", out, nFiles = 8)
-    val back = s.read.parquet(out)
+    val back = ParquetOpen.read(s, out)
     val stats = back.agg(
       min(col("o_custkey")).as("amin"), max(col("o_custkey")).as("amax"),
       min(col("price_l")).as("bmin"), max(col("price_l")).as("bmax"))
@@ -284,8 +285,8 @@ object EtlQueries {
     * asserts the pruning subquery is actually in the executed plan. */
   def dppJoin: Q = (s, d) => {
     val (factOut, dimOut) = prepareDpp(s, d)
-    val fact = s.read.parquet(factOut)
-    val dim = s.read.parquet(dimOut).filter(col("quarter") === "1996-Q2")
+    val fact = ParquetOpen.read(s, factOut)
+    val dim = ParquetOpen.read(s, dimOut).filter(col("quarter") === "1996-Q2")
     fact.join(broadcast(dim), Seq("ship_month"))
       .groupBy("ship_month")
       .agg(count(lit(1)).as("cnt"),

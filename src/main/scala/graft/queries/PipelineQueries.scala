@@ -1020,7 +1020,7 @@ object PipelineQueries {
     val out = s"${sys.props("java.io.tmpdir")}/graft_export_${d.hashCode.toHexString}"
     graft.operators.ShardedExport.write(docsWithTokens(s, d), "doc_id",
       out, shards = 8, salt = "export")
-    val back = s.read.parquet(out)
+    val back = graft.util.ParquetOpen.read(s, out)
     back.groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_toks").cast("long")).as("n_tokens"),

@@ -42,14 +42,15 @@ object EventsStream {
     *     TIMESTAMP_NTZ, cast to TimestampType (UTC session, so the
     *     instant is unchanged);
     *   - INT64 TIMESTAMP(MICROS, UTC): already TimestampType.
-    * The footer is probed once with a driver-only batch read (no data
-    * scan, no inference job on the stream) so the declared stream schema
-    * always matches the files — a mismatch would silently misread `ts`
-    * and corrupt every watermark downstream. */
+    * The footer is probed once through [[graft.util.ParquetOpen.read]]
+    * (a driver-side footer read: no data scan, no Spark job) so the
+    * declared stream schema always matches the files — a mismatch would
+    * silently misread `ts` and corrupt every watermark downstream. */
   def eventsRawStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsPhysical =
-      spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType
+      graft.util.ParquetOpen.read(spark, s"$sfDir/events.parquet")
+        .schema("ts").dataType
     val raw = spark.readStream
       .schema(eventsRawSchema(tsPhysical))
       // file-stream sources require a directory; glob-filter to the table
@@ -436,7 +437,7 @@ object EventsStream {
     * drained source this equals the batch join+group — the oracle. */
   def streamStaticEnrichedCounts(spark: SparkSession, sfDir: String,
       queryName: String = "events_enrich"): DataFrame = {
-    val dim = spark.read.parquet(s"$sfDir/customer.parquet")
+    val dim = graft.Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val enriched = eventsRawStream(spark, sfDir)
       .join(dim, col("user_id") === col("c_custkey"), "left")
@@ -515,7 +516,7 @@ object EventsStream {
     graft.etl.SnapshotStore.withTableLock(snapRoot) {
       import org.apache.spark.sql.expressions.Window
       val merged = graft.etl.SnapshotStore.currentDir(snapRoot) match {
-        case Some(p) => spark.read.parquet(p).unionByName(batch)
+        case Some(p) => graft.util.ParquetOpen.read(spark, p).unionByName(batch)
         case None => batch
       }
       val w = Window.partitionBy(col("user_id"))
@@ -532,8 +533,8 @@ object EventsStream {
 
   /** The committed upsert state as the lane's result shape. */
   def upsertState(spark: SparkSession, snapRoot: String): DataFrame =
-    spark.read.parquet(graft.etl.SnapshotStore.currentDir(snapRoot)
-      .getOrElse(throw new IllegalStateException(
+    graft.util.ParquetOpen.read(spark, graft.etl.SnapshotStore
+      .currentDir(snapRoot).getOrElse(throw new IllegalStateException(
         s"no committed upsert snapshot at $snapRoot")))
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type").as("last_type"),

@@ -115,7 +115,7 @@ object LateDataGate {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
-    spark.read.parquet(s"$work/out")
+    graft.util.ParquetOpen.read(spark, s"$work/out")
       .groupBy(col("event_type"))
       .agg(
         sum(when(col("late"), 0L).otherwise(1L)).as("n_ontime"),

@@ -121,14 +121,14 @@ object RestartRecovery {
     landSlice(0); landSlice(1)
     runIncarnation()
     val phaseARows =
-      try spark.read.parquet(out).count()
+      try graft.util.ParquetOpen.read(spark, out).count()
       catch { case _: Throwable => 0L } // nothing finalized yet
     // phase B: the rest lands, the SAME query restarts from the ckpt
     landSlice(2); landSlice(3); landSentinels()
     runIncarnation()
 
     // batch read resolves through _spark_metadata → committed files only
-    val merged = spark.read.parquet(out)
+    val merged = graft.util.ParquetOpen.read(spark, out)
       .filter(col("event_type") =!= SENTINEL)
     (phaseARows, merged)
   }
