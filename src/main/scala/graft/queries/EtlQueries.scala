@@ -1871,17 +1871,11 @@ object EtlQueries {
   private val tailRuns = new java.util.concurrent.atomic.AtomicInteger()
   def snapshotStreamTail: Q = (s, d) => {
     val root = prepareSnapshotSqlInsert(s, d)
-    val n = tailRuns.incrementAndGet()
-    val sinkName = s"graft_snapshot_tail_$n"
-    val ckpt = graft.util.Fs.processScratchRoot("snaptailck", s"_$n")
-    graft.util.Fs.deleteRecursively(new java.io.File(ckpt))
-    val q = s.readStream.format("graft-snapshot").load(root)
-      .writeStream.format("memory").queryName(sinkName)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    monthAgg(s.table(sinkName))
+    val sinkName = s"graft_snapshot_tail_${tailRuns.incrementAndGet()}"
+    val ckpt = graft.streaming.StreamDrain.workDir("snaptailck")
+    monthAgg(graft.streaming.StreamDrain.toMemory(
+      s.readStream.format("graft-snapshot").load(root), "append", sinkName,
+      availableNow = true, checkpoint = Some(ckpt)))
   }
 
   /** Streaming CHANGE FEED
@@ -1896,19 +1890,13 @@ object EtlQueries {
   private val cdfRuns = new java.util.concurrent.atomic.AtomicInteger()
   def snapshotStreamCdf: Q = (s, d) => {
     val (root, _) = prepareSnapshotHistory(s, d)
-    val n = cdfRuns.incrementAndGet()
-    val sinkName = s"graft_snapshot_cdf_$n"
-    val ckpt = graft.util.Fs.processScratchRoot("snapcdfck", s"_$n")
-    graft.util.Fs.deleteRecursively(new java.io.File(ckpt))
-    val q = s.readStream.format("graft-snapshot")
+    val sinkName = s"graft_snapshot_cdf_${cdfRuns.incrementAndGet()}"
+    val ckpt = graft.streaming.StreamDrain.workDir("snapcdfck")
+    val cdf = s.readStream.format("graft-snapshot")
       .option("readChangeFeed", "true").option("startingSeq", 1L)
       .load(root)
-      .writeStream.format("memory").queryName(sinkName)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sinkName)
+    graft.streaming.StreamDrain.toMemory(cdf, "append", sinkName,
+        availableNow = true, checkpoint = Some(ckpt))
       .groupBy(col("order_month"),
         col("_change_type").as("change_type"))
       .agg(count(lit(1)).as("cnt"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.streaming.EventsStream
+import graft.streaming.{EventsStream, StreamDrain}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -440,16 +440,10 @@ object EventQueries {
     val agg = EventsStream.eventsRawStream(s, d)
       .select(col("user_id").cast("string").as("k"))
       .agg(countMin(col("k"), depth, width).as("ska"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName("events_cms_monitor")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    val monitor = StreamDrain.toMemory(agg, "complete", "events_cms_monitor")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey").cast("string").as("k"))
-    val sk = s.table("events_cms_monitor")
+    val sk = monitor
       .crossJoin(cust.agg(countMin(col("k"), depth, width).as("skb")))
     val est = sk.select(least((0 until depth).map { r =>
       aggregate(

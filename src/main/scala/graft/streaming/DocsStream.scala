@@ -75,14 +75,7 @@ object DocsStream {
       .join(broadcast(corpusBands), Seq("band", "bkey"))
       .select(col("doc_id"), col("source"))
       .dropDuplicates("doc_id")
-    val q = matched.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val flagged = spark.table(queryName)
+    val flagged = StreamDrain.toMemory(matched, "append", queryName)
       .groupBy(col("source")).agg(count(lit(1)).as("n_flagged"))
     graft.Tables.documents(spark, sfDir)
       .filter(pmod(col("doc_id"), lit(5)) === 0)
@@ -111,13 +104,6 @@ object DocsStream {
     val counts = flagged.groupBy(col("lang"), col("gopher_pass"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_words")).as("n_words"))
-    val q = counts.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(counts, "complete", queryName)
   }
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * shuffle key is (window, event_type). The same query would run
   * unchanged against a Kafka source at production scale.
   *
-  * For deterministic verification the stream is driven to completion
-  * with `processAllAvailable` into an in-memory sink; the result then
+  * For deterministic verification every lane is drained to completion
+  * through [[StreamDrain]], here into an in-memory sink; the result then
   * equals the batch aggregation by `date_trunc('hour', ts)` — which is
   * exactly what the DuckDB oracle computes.
   */
@@ -90,14 +90,8 @@ object EventsStream {
         sum(round(col("value") * 100).cast("long")).as("sum_cents"))
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("cnt"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val totals = q.recentProgress.toSeq
+    val totals = StreamDrain.run(stream)(
+        _.outputMode("complete").format("memory").queryName(queryName))
       .flatMap(p => Option(p.observedMetrics.get("ingest_quality")))
       .map(r => (r.getAs[Long]("n_rows"), r.getAs[Long]("n_null_value"),
         r.getAs[Long]("sum_cents")))
@@ -113,14 +107,7 @@ object EventsStream {
       .dropDuplicates("user_id", "event_type")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("distinct_users"))
-    val q = deduped.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(deduped, "complete", queryName)
   }
 
   /** Bounded-state streaming dedup — the production form of
@@ -141,14 +128,7 @@ object EventsStream {
     val deduped = eventsRawStream(spark, sfDir)
       .withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
-    val q = deduped.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(deduped, "append", queryName)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("distinct_users"))
   }
@@ -174,14 +154,7 @@ object EventsStream {
       col("v_user") === col("p_user") &&
         col("p_ts") >= col("v_ts") &&
         col("p_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"))
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(joined, "append", queryName)
       .groupBy(col("v_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
   }
@@ -215,14 +188,7 @@ object EventsStream {
         col("p_ts") >= col("v_ts") &&
         col("p_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"),
       "leftOuter")
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(joined, "append", queryName)
       .groupBy(col("v_user").as("user_id"))
       .agg(count(col("p_id")).as("n_pairs"),
         count(when(col("p_id").isNull, 1)).as("n_expired"))
@@ -258,14 +224,7 @@ object EventsStream {
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value").cast("decimal(38,8)")).cast("double"), 4)
           .as("sum_value"))
-    val q = enriched.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(enriched, "complete", queryName)
   }
 
   /** Streaming heavy hitters: the custom Misra-Gries
@@ -285,14 +244,7 @@ object EventsStream {
         pmod(col("user_id"), lit(10L)).cast("string")).as("key"))
       .agg(graft.functions.SketchFunctions.heavyHitters(col("key"), 200)
         .as("hh"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(agg, "complete", queryName)
       .select(explode(col("hh")).as(Seq("key", "cnt")))
   }
 
@@ -309,14 +261,7 @@ object EventsStream {
     val agg = eventsRawStream(spark, sfDir)
       .groupBy(col("event_type"))
       .agg(graft.functions.HllFunctions.hll(col("user_id"), 8).as("regs"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(agg, "complete", queryName)
       .select(col("event_type"),
         round(graft.functions.HllFunctions.hllEstimate(col("regs"), 8), 2)
           .as("hll_est"))
@@ -338,16 +283,9 @@ object EventsStream {
         expr(graft.operators.HistogramQuantile.floorDivSql(
           "CAST(round(value * 100) AS BIGINT)", 1000)).as("bin"))
       .agg(count(lit(1)).as("cnt"))
-    val q = hist.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
     graft.operators.HistogramQuantile.quantilesOfHist(
-      spark.table(queryName), "event_type", binWidth = 1000L,
-      perUnit = 100L, qs = Seq(("p50", 1, 2), ("p95", 19, 20)))
+      StreamDrain.toMemory(hist, "complete", queryName), "event_type",
+      binWidth = 1000L, perUnit = 100L, qs = Seq(("p50", 1, 2), ("p95", 19, 20)))
   }
 
   /** Streaming typed-Aggregator moments: [[graft.operators.TypedOps
@@ -369,14 +307,7 @@ object EventsStream {
       .mapValues(_._2)
       .agg(graft.operators.TypedOps.momentsAgg.toColumn.name("m"))
       .toDF("event_type", "m")
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(agg, "complete", queryName)
       .select(col("event_type"), col("m.n").as("n_events"),
         round((col("m.s1").cast("double") / col("m.n")) / 100.0, 6)
           .as("mean_value"),
@@ -396,15 +327,7 @@ object EventsStream {
     * manifest — the oracle. */
   def streamingExportManifest(spark: SparkSession, sfDir: String,
       queryName: String = "docs_manifest"): DataFrame = {
-    import org.apache.spark.sql.types._
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val docs = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = DocsStream.docsRawStream(spark, sfDir)
       .withColumn("n_toks",
         graft.functions.TextFunctions.tokenCount(
           graft.functions.TextFunctions.normalize(col("text"))))
@@ -417,14 +340,7 @@ object EventsStream {
         sum(col("n_toks").cast("long")).as("n_tokens"),
         min(col("_ord")).as("first_key"),
         max(col("_ord")).as("last_key"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(agg, "complete", queryName)
   }
 
   /** Stream-static ENRICHMENT join: the event stream joined to a static
@@ -445,14 +361,7 @@ object EventsStream {
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value").cast("decimal(38,8)")).cast("double"), 4)
           .as("sum_value"))
-    val q = enriched.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(enriched, "complete", queryName)
   }
 
   /** STREAMING session windows: `session_window` inside a watermarked
@@ -476,14 +385,7 @@ object EventsStream {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"), col("sum_value"))
-    val q = sessions.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(sessions, "append", queryName)
   }
 
   /** One micro-batch of the CDC upsert sink, committed through the
@@ -556,30 +458,17 @@ object EventsStream {
     * upsert-on-immutable-files; the per-key state stays one row. */
   def streamingUpsertLatest(spark: SparkSession, sfDir: String,
       nChunks: Int = 4, workDir: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = workDir.getOrElse(java.nio.file.Files
-      .createTempDirectory("graft_upsert").toString)
+    val work = workDir.getOrElse(StreamDrain.workDir("upsert"))
     val ev = graft.Tables.events(spark, sfDir)
       .select("event_id", "ts", "user_id", "event_type", "value")
-    (0 until nChunks).foreach { c =>
-      ev.filter(pmod(col("event_id"), lit(nChunks)) === c)
-        .coalesce(1).write.mode("overwrite").parquet(s"$work/src/chunk_$c")
-    }
+    StreamDrain.stageChunks(ev, s"$work/src", nChunks)
     val snapRoot = s"$work/state_snap"
-    val stream = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(s"$work/src/chunk_*")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    StreamDrain.run(StreamDrain.chunkStream(spark, ev.schema, s"$work/src"),
+        availableNow = true)(
+      _.foreachBatch { (batch: DataFrame, _: Long) =>
         upsertCommitBatch(spark, snapRoot, batch)
         ()
-      }
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }.option("checkpointLocation", s"$work/ckpt"))
     upsertState(spark, snapRoot)
   }
 
@@ -602,27 +491,14 @@ object EventsStream {
     * append sink. */
   def streamingUpsertEqDelta(spark: SparkSession, sfDir: String,
       nChunks: Int = 4, workDir: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = workDir.getOrElse(java.nio.file.Files
-      .createTempDirectory("graft_equps").toString)
+    val work = workDir.getOrElse(StreamDrain.workDir("equps"))
     val ev = graft.Tables.events(spark, sfDir)
       .select("event_id", "ts", "user_id", "event_type", "value")
-    (0 until nChunks).foreach { c =>
-      val dir = s"$work/src/chunk_$c"
-      ev.filter(pmod(col("event_id"), lit(nChunks)) === c)
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      // deterministic arrival order on any filesystem clock
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .foreach(_.setLastModified(1700000000000L + c * 60000L))
-    }
+    StreamDrain.stageChunks(ev, s"$work/src", nChunks)
     val snapRoot = s"$work/state_snap"
-    val stream = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(s"$work/src/chunk_*")
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
+    StreamDrain.run(StreamDrain.chunkStream(spark, ev.schema, s"$work/src"),
+        availableNow = true)(
+      _.foreachBatch { (b: DataFrame, batchId: Long) =>
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("user_id"))
           .orderBy(col("ts").desc, col("event_id").desc)
@@ -633,11 +509,7 @@ object EventsStream {
           keyCols = Seq("user_id"),
           idempotence = Some((s"$work/ckpt", batchId.toString)))
         ()
-      }
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }.option("checkpointLocation", s"$work/ckpt"))
     // the routing proof: the commits attached equality deletes and
     // stamped the era (a silent fall-back to rewrite-the-state would
     // stay hash-green while losing the O(batch) commit economics)
@@ -672,14 +544,7 @@ object EventsStream {
       .agg(HF.hll(col("user_id"), 8).as("regs"))
       .select(col("window.start").as("win_start"), col("event_type"),
         round(HF.hllEstimate(col("regs"), 8), 2).as("hll_est"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(stream, "complete", queryName)
   }
 
   /** SLIDING-window streaming stats — the 3-arg `window(ts, size,
@@ -703,19 +568,11 @@ object EventsStream {
           .as("sum_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("cnt"), col("sum_value"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    StreamDrain.toMemory(stream, "complete", queryName)
   }
 
   def hourlyStats(spark: SparkSession, sfDir: String,
       queryName: String = "events_hourly"): DataFrame = {
-    spark.conf.set("spark.sql.streaming.schemaInference", "false")
     val stream = eventsRawStream(spark, sfDir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -725,34 +582,20 @@ object EventsStream {
           .as("sum_value"))
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("cnt"), col("sum_value"))
-    // State-store partition bound, DATA-PROPORTIONAL (guide §2.2/§5):
-    // the post-shuffle state key is (hour window, event_type); under
-    // the 1-hour watermark the ACTIVE keys per micro-batch are a few
-    // open windows × |event types| — single/double digits, bounded by
-    // the key domain, NOT by input volume. Streaming state partitions
-    // are fixed at query start from spark.sql.shuffle.partitions, and
-    // every micro-batch pays one state-store commit + WAL entry PER
-    // PARTITION — sizing them for a corpus-scale batch shuffle (32
-    // here; thousands on a cluster) pays 32 commits/batch to hold ~10
-    // keys. Partitions here scale with the key domain via
-    // SPARK_GRAFT_STREAM_STATE_PARTITIONS (default 8 ≈ active keys,
-    // generous for this 5-type schema; deployments with wide key
-    // domains raise it). Restored after the drain — batch lanes keep
-    // the session's corpus-scale setting. Results are partition-count
-    // invariant (exact decimal sums), so the oracle is unaffected.
-    val stateParts =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts)
-    try {
-      val q = stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    spark.table(queryName)
+    // State-store partition bound, DATA-PROPORTIONAL: the post-shuffle
+    // state key is (hour window, event_type); under the 1-hour
+    // watermark the ACTIVE keys per micro-batch are a few open windows
+    // × |event types|, bounded by the key domain, NOT by input volume.
+    // Streaming state partitions are fixed at query start from
+    // spark.sql.shuffle.partitions, and every micro-batch pays one
+    // state-store commit + WAL entry PER PARTITION, so the query runs
+    // at 8 (about the active keys of this 5-type schema) whatever the
+    // session's batch setting is (its core count under
+    // GraftSession.local; thousands on a cluster). The override reaches
+    // this query only (StreamDrain.run); batch lanes keep the session's
+    // value. Results are partition-count invariant (exact decimal
+    // sums), so the oracle is unaffected.
+    StreamDrain.toMemory(stream, "complete", queryName,
+      confs = Map("spark.sql.shuffle.partitions" -> "8"))
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+  TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Late-data quarantine — the dead-letter half of event-time
   * processing that watermarked aggregation lanes leave implicit: a
@@ -67,54 +67,21 @@ object LateDataGate {
   def quarantineCounts(spark: SparkSession, sfDir: String,
       nChunks: Int = 4, delayMs: Long = 3600000L): DataFrame = {
     import spark.implicits._
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_lategate").toString
+    val work = StreamDrain.workDir("lategate")
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"),
         (unix_millis(col("ts"))).as("ts_ms"))
-    (0 until nChunks).foreach { c =>
-      val dir = s"$work/src/chunk_$c"
-      ev.filter(pmod(col("event_id"), lit(nChunks)) === c)
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      // pin mtimes so FileStreamSource's oldest-first order is chunk
-      // order even when the writes land within one clock tick
-      new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .foreach(_.setLastModified(1700000000000L + c * 60000L))
-    }
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val classified = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("ts_ms",
-            org.apache.spark.sql.types.LongType))))
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"$work/src/chunk_*")
-        .as[Ev]
-        .groupByKey(_.event_type)
-        .transformWithState(new GateProcessor(delayMs),
-          TimeMode.None(), OutputMode.Append())
-      val q = classified.writeStream
-        .outputMode("append")
-        .format("parquet")
+    StreamDrain.stageChunks(ev, s"$work/src", nChunks)
+    val classified = StreamDrain.chunkStream(spark, ev.schema, s"$work/src")
+      .as[Ev]
+      .groupByKey(_.event_type)
+      .transformWithState(new GateProcessor(delayMs),
+        TimeMode.None(), OutputMode.Append())
+    StreamDrain.run(classified, availableNow = true,
+        confs = StreamDrain.RocksDbState)(
+      _.outputMode("append").format("parquet")
         .option("path", s"$work/out")
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+        .option("checkpointLocation", s"$work/ckpt"))
     graft.util.ParquetOpen.read(spark, s"$work/out")
       .groupBy(col("event_type"))
       .agg(

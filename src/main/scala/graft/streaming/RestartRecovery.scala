@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** Checkpoint-recovery replay — the fault-tolerance contract a 24/7
   * ingestion pipeline actually relies on, which none of the other
@@ -52,8 +50,7 @@ object RestartRecovery {
     * [[EventsStream.hourlyStats]], same oracle. */
   def hourlyStatsWithRestart(spark: SparkSession, sfDir: String)
       : (Long, DataFrame) = {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_restart").toString
+    val work = StreamDrain.workDir("restart")
     val landing = s"$work/landing"
     val out = s"$work/out"
     val ckpt = s"$work/ckpt"
@@ -90,14 +87,7 @@ object RestartRecovery {
     // one incarnation of the query — both phases build it identically,
     // exactly as a redeployed production job re-submits the same plan
     def runIncarnation(): Unit = {
-      val stream = spark.readStream
-        .schema(StructType(Seq(
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType))))
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"$landing/chunk_*")
+      val stream = StreamDrain.chunkStream(spark, ev.schema, landing)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(
@@ -106,15 +96,9 @@ object RestartRecovery {
             .as("sum_value"))
         .select(col("window.start").as("hour_start"), col("event_type"),
           col("cnt"), col("sum_value"))
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+      StreamDrain.run(stream, availableNow = true)(
+        _.outputMode("append").format("parquet").option("path", out)
+          .option("checkpointLocation", ckpt))
     }
 
     // phase A: half the timeline, then a hard stop

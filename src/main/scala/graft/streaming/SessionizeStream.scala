@@ -72,15 +72,7 @@ object SessionizeStream {
     // AvailableNow drains the source in micro-batches then terminates —
     // processAllAvailable never settles here because ProcessingTime
     // timeouts keep scheduling timeout-check batches.
-    val q = sessions.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    import spark.implicits._
-    spark.table(queryName).as[Session]
+    StreamDrain.toMemory(sessions, "append", queryName, availableNow = true)
+      .as[Session]
   }
 }

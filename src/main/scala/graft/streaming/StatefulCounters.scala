@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+  TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Per-key running totals via `transformWithState` — Spark 4's
   * arbitrary-stateful-processing API (the successor to
@@ -52,52 +52,21 @@ object StatefulCounters {
   def runningTotals(spark: SparkSession, sfDir: String,
       nChunks: Int = 4, queryName: String = "events_tws"): DataFrame = {
     import spark.implicits._
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_tws").toString
+    val work = StreamDrain.workDir("tws")
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("user_id"),
         round(col("value") * 100).cast("long").as("cents"),
         col("event_id"))
-    (0 until nChunks).foreach { c =>
-      ev.filter(pmod(col("event_id"), lit(nChunks)) === c)
-        .drop("event_id")
-        .coalesce(1).write.mode("overwrite").parquet(s"$work/src/chunk_$c")
-    }
-    // transformWithState requires the RocksDB state store; scope the
-    // provider override to this query (captured at start) and restore
-    // the session default for every other streaming lane.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val snapshots = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("cents",
-            org.apache.spark.sql.types.LongType))))
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"$work/src/chunk_*")
-        .as[Ev]
-        .groupByKey(_.user_id)
-        .transformWithState(new TotalsProcessor,
-          TimeMode.None(), OutputMode.Append())
-      val q = snapshots.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-    spark.table(queryName)
+    StreamDrain.stageChunks(ev, s"$work/src", nChunks)
+    val snapshots = StreamDrain
+      .chunkStream(spark, ev.drop("event_id").schema, s"$work/src")
+      .as[Ev]
+      .groupByKey(_.user_id)
+      .transformWithState(new TotalsProcessor,
+        TimeMode.None(), OutputMode.Append())
+    StreamDrain.toMemory(snapshots, "append", queryName,
+        availableNow = true, checkpoint = Some(s"$work/ckpt"),
+        confs = StreamDrain.RocksDbState)
       .groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"),
         max(col("sum_cents")).as("sum_cents"))

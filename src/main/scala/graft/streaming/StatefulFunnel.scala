@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TTLConfig, TimeMode, Trigger, TimerValues, ValueState}
+  TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Streaming twin of the windowed funnel
   * ([[graft.queries.EventQueries.funnelConversion]]) — the always-on
@@ -126,101 +126,29 @@ object StatefulFunnel {
     }
   }
 
-  /** Shared drain harness for both funnel stream lanes: stage the
-    * events table into `nChunks` files (the caller's `stage` decides
-    * the cut — chronological quantiles or event-id hash), replay them
-    * one file per micro-batch through `processor` over RocksDB state,
-    * and return the drained memory table. Conf set/restore and the
-    * checkpointed AvailableNow drain live HERE once, so a fix to the
-    * drain path cannot diverge the two lanes that share one oracle. */
+  /** The drain both funnel stream lanes share: stage the events table
+    * into `nChunks` files ([[StreamDrain.stageChunks]]: chronological
+    * quantiles, the [[FunnelProcessor]] requirement, or event-id hash,
+    * where each chunk spans the whole timeline and arrival order is
+    * ARBITRARY in event time — the [[BufferedFunnelProcessor]] stress
+    * shape), replay them one file per micro-batch through `processor`
+    * over RocksDB state, and return the drained memory table. */
   private def drainWithProcessor[O](spark: SparkSession, sfDir: String,
-      prefix: String, queryName: String, nChunks: Int,
-      stage: (DataFrame, String, Int) => Unit,
-      processor: StatefulProcessor[Long, Ev, O])(
+      family: String, queryName: String, nChunks: Int,
+      chronological: Boolean, processor: StatefulProcessor[Long, Ev, O])(
       implicit enc: org.apache.spark.sql.Encoder[O]): DataFrame = {
     import spark.implicits._
-    val work = java.nio.file.Files
-      .createTempDirectory(prefix).toString
+    val work = StreamDrain.workDir(family)
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"))
-    stage(ev, s"$work/src", nChunks)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val out = spark.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"$work/src/chunk_*")
-        .as[Ev]
-        .groupByKey(_.user_id)
-        .transformWithState(processor, TimeMode.None(), OutputMode.Append())
-      val q = out.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-    spark.table(queryName)
-  }
-
-  /** FileStreamSource replays input ordered by file MTIME; relying on
-    * wall-clock write order (the former 5 ms sleep between chunks)
-    * breaks on filesystems with coarse mtime granularity — tied stamps
-    * replay in arbitrary order and silently violate the chronological
-    * processor's precondition. Instead every file under chunk c is
-    * stamped base + c seconds explicitly: strictly increasing by
-    * construction on any filesystem. */
-  private def stampChunk(dir: String, c: Int, baseMs: Long): Unit = {
-    def walk(f: java.io.File): Unit = {
-      java.nio.file.Files.setLastModifiedTime(f.toPath,
-        java.nio.file.attribute.FileTime.fromMillis(baseMs + c * 1000L))
-      if (f.isDirectory) f.listFiles().foreach(walk)
-    }
-    walk(new java.io.File(s"$dir/chunk_$c"))
-  }
-
-  /** Chronological staging: chunks cut at event-time quantiles, written
-    * oldest first (equal-ts rows can't straddle a cut, so per-user
-    * replay order is event time — the FunnelProcessor requirement). */
-  private def stageChronological(ev: DataFrame, dir: String,
-      nChunks: Int): Unit = {
-    val bounds = ev.selectExpr(
-      (1 until nChunks).map(i =>
-        s"percentile(CAST(ts AS DOUBLE), ${i.toDouble / nChunks})"): _*)
-      .head().toSeq.map(_.asInstanceOf[Double])
-    val lo = Double.MinValue +: bounds
-    val hi = bounds :+ Double.MaxValue
-    val baseMs = System.currentTimeMillis()
-    (0 until nChunks).foreach { c =>
-      ev.filter(col("ts").cast("double") >= lo(c) &&
-          col("ts").cast("double") < hi(c))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/chunk_$c")
-      stampChunk(dir, c, baseMs)
-    }
-  }
-
-  /** Hash staging: chunks cut by event_id hash — each chunk spans the
-    * whole timeline, so arrival order is ARBITRARY in event time (the
-    * BufferedFunnelProcessor stress shape). */
-  private def stageHashed(ev: DataFrame, dir: String,
-      nChunks: Int): Unit = {
-    val baseMs = System.currentTimeMillis()
-    (0 until nChunks).foreach { c =>
-      ev.filter(pmod(col("event_id"), lit(nChunks)) === c)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/chunk_$c")
-      stampChunk(dir, c, baseMs)
-    }
+    StreamDrain.stageChunks(ev, s"$work/src", nChunks, chronological)
+    val out = StreamDrain.chunkStream(spark, ev.schema, s"$work/src")
+      .as[Ev]
+      .groupByKey(_.user_id)
+      .transformWithState(processor, TimeMode.None(), OutputMode.Append())
+    StreamDrain.toMemory(out, "append", queryName, availableNow = true,
+      checkpoint = Some(s"$work/ckpt"), confs = StreamDrain.RocksDbState)
   }
 
   /** Hash-chunked staging + buffered processor: chunks arrive in
@@ -231,8 +159,8 @@ object StatefulFunnel {
       nChunks: Int = 4, queryName: String = "events_tws_funnel_ooo")
       : DataFrame = {
     import spark.implicits._
-    val t = drainWithProcessor(spark, sfDir, "graft_tws_funnel_ooo",
-      queryName, nChunks, stageHashed, new BufferedFunnelProcessor)
+    val t = drainWithProcessor(spark, sfDir, "tws_funnel_ooo",
+      queryName, nChunks, chronological = false, new BufferedFunnelProcessor)
     // last emission per user = fold of the complete buffer
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("seq").desc)
@@ -247,8 +175,8 @@ object StatefulFunnel {
   def funnelLevels(spark: SparkSession, sfDir: String, nChunks: Int = 4,
       queryName: String = "events_tws_funnel"): DataFrame = {
     import spark.implicits._
-    drainWithProcessor(spark, sfDir, "graft_tws_funnel", queryName,
-      nChunks, stageChronological, new FunnelProcessor)
+    drainWithProcessor(spark, sfDir, "tws_funnel", queryName,
+      nChunks, chronological = true, new FunnelProcessor)
       .groupBy("user_id")
       .agg(max(col("level")).as("funnel_level"))
   }

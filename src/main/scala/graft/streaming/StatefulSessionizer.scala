@@ -5,7 +5,7 @@ import java.time.Instant
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Timer-driven sessionization via `transformWithState` in EVENT-TIME
   * mode — the third stateful-session implementation tier, exercising
@@ -27,7 +27,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   * no listTimers scan.
   *
   * Determinism: the events table is staged into `nChunks` files CUT BY
-  * EVENT TIME (chronological arrival, written oldest-first so the
+  * EVENT TIME (chronological arrival, mtime-stamped oldest-first so the
   * file source replays history in order) — the zero-delay watermark
   * advances monotonically and nothing is ever late. Inline closes
   * always precede a same-user successor event (end < that event's
@@ -113,55 +113,20 @@ object StatefulSessionizer {
   def sessions(spark: SparkSession, sfDir: String, nChunks: Int = 4,
       queryName: String = "events_tws_sess"): DataFrame = {
     import spark.implicits._
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_tws_sess").toString
+    val work = StreamDrain.workDir("tws_sess")
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    // chronological chunks: cut at event-time quantiles, write oldest
-    // first so the file source (ordered by mod time) replays history
-    val bounds = ev.selectExpr(
-      (1 until nChunks).map(i =>
-        s"percentile(CAST(ts AS DOUBLE), ${i.toDouble / nChunks})"): _*)
-      .head().toSeq.map(_.asInstanceOf[Double])
-    val lo = Double.MinValue +: bounds
-    val hi = bounds :+ Double.MaxValue
-    (0 until nChunks).foreach { c =>
-      ev.filter(col("ts").cast("double") >= lo(c) &&
-          col("ts").cast("double") < hi(c))
-        .coalesce(1).write.mode("overwrite").parquet(s"$work/src/chunk_$c")
-      Thread.sleep(5) // strictly increasing mod times → ordered replay
-    }
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val out = spark.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"$work/src/chunk_*")
-        .withWatermark("ts", "0 seconds")
-        .as[Ev]
-        .groupByKey(_.user_id)
-        .transformWithState(new SessionProcessor,
-          TimeMode.EventTime(), OutputMode.Append())
-      val q = out.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    StreamDrain.stageChunks(ev, s"$work/src", nChunks, chronological = true)
+    val out = StreamDrain.chunkStream(spark, ev.schema, s"$work/src")
+      .withWatermark("ts", "0 seconds")
+      .as[Ev]
+      .groupByKey(_.user_id)
+      .transformWithState(new SessionProcessor,
+        TimeMode.EventTime(), OutputMode.Append())
     // rounding happens HERE (Spark round = HALF_UP, matching the
     // oracle) — the processor emits the raw event-order fold
-    spark.table(queryName)
+    StreamDrain.toMemory(out, "append", queryName, availableNow = true,
+        checkpoint = Some(s"$work/ckpt"), confs = StreamDrain.RocksDbState)
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), round(col("raw_sum"), 4).as("sum_value"))
   }
