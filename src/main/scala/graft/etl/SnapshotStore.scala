@@ -2932,8 +2932,11 @@ object SnapshotStore {
     * (positions accumulate until a restatement folds them), writes one
     * sidecar dir per entry under the claimed snap dir, and drops an
     * entry outright when its vector covers every written row. Commit
-    * cost of the DV side: O(deleted positions), never O(partition). */
-  def restatePartitions(restated: DataFrame, root: String,
+    * cost of the DV side: O(deleted positions), never O(partition).
+    * `restated = None` commits no restated data: no data write, no
+    * fresh entry (a DELETE whose every group takes the vector route);
+    * the table schema carries unchanged. */
+  def restatePartitions(restated: Option[DataFrame], root: String,
       dropValues: Set[String], partCol: String, sortCol: String,
       cdc: Option[DataFrame] = None,
       dropOld: Set[(String, String)] = Set.empty,
@@ -2943,12 +2946,22 @@ object SnapshotStore {
     withCommitLock(root) {
       val prior = current(root).getOrElse(
         throw new IllegalStateException(s"no snapshot at $root to restate"))
-      checkLayout(Some(prior), partCol, sortCol, restated)
-      val merged = prior.schema.map(mergeSchemas(_, restated.schema))
-        .getOrElse(restated.schema)
+      // the frame whose session renders this commit's tokens (only its
+      // session is read when no data is restated)
+      val like = restated.orElse(cdc).orElse(dvPositions).getOrElse(
+        throw new IllegalArgumentException("restatePartitions: no " +
+          "restated data, CDC rows or deletion vectors to commit"))
+      checkLayout(Some(prior), partCol, sortCol, like)
+      val merged = restated match {
+        case Some(r) =>
+          prior.schema.map(mergeSchemas(_, r.schema)).getOrElse(r.schema)
+        case None => prior.schema.getOrElse(throw new IllegalStateException(
+          s"table at $root predates schema-carrying manifests — a " +
+            "commit with no restated data cannot type it"))
+      }
       val id = allocateId(root)
-      val fresh = writeSnapData(restated, root, id, partCol, sortCol,
-        Some(merged))
+      val fresh = restated.map(writeSnapData(_, root, id, partCol,
+        sortCol, Some(merged))).getOrElse(Seq.empty)
       val stray = fresh.map(_.value)
         .filterNot(v => dropValues(v) || appendValues(v))
       require(stray.isEmpty,
@@ -2972,7 +2985,7 @@ object SnapshotStore {
         val unknown = dvK.keys.filterNot(byDir.contains)
         require(unknown.isEmpty, "restatePartitions: dvEntries name " +
           s"dirs absent from the manifest: ${unknown.mkString(", ")}")
-        val spark = restated.sparkSession
+        val spark = like.sparkSession
         val deltas = dvPositions.getOrElse(throw new IllegalArgumentException(
           "restatePartitions: dvEntries without dvPositions"))
         // merge prior vectors: positions accumulate across DV commits,
@@ -3014,7 +3027,7 @@ object SnapshotStore {
         }
       }
       commitManifest(root, Manifest(id, dropOrDv ++ fresh, Some(merged),
-        prior.props ++ layoutProps(partCol, sortCol, restated)),
+        prior.props ++ layoutProps(partCol, sortCol, like)),
         seqOf(prior))
       id
     }

@@ -30,36 +30,81 @@ object MergeInto {
 
   /** Candidate ENTRIES of the key-range prune — the entry-granular
     * form of [[candidatePartitions]] (vintage-uniform: the prune keys
-    * on entry stats, never on tokens). */
-  private def candidateEntries(m: SnapshotStore.Manifest,
-      changes: DataFrame, key: String): Seq[SnapshotStore.Entry] =
-    candidatePartitions(m, changes, key) match {
-      case Some(vs) => m.entries.filter(e => vs(e.value))
+    * on entry stats, never on tokens). `keyType` is
+    * [[prunableKeyType]]'s answer and `bounds` the source's non-null
+    * key range from [[sourcePass]]. */
+  private def candidateEntries(m: SnapshotStore.Manifest, key: String,
+      keyType: Option[org.apache.spark.sql.types.DataType],
+      bounds: Option[(Any, Any)]): Seq[SnapshotStore.Entry] =
+    keyType match {
+      case Some(t) =>
+        val vs = pruneToKeyRange(m, key, t, bounds)
+        m.entries.filter(e => vs(e.value))
       case None => m.entries
     }
 
-  /** Entries holding ≥1 base row whose key matches the changeset —
-    * attributed by FILE identity ([[SnapshotStore.entryDirCol]]), so
-    * discovery is uniform across partition-spec vintages
-    * ([[SnapshotStore.evolvePartitionSpec]]) and deletion vectors are
+  /** ONE aggregate over the materialized source: the min/max of the
+    * `rangeKey` column (nulls ignored; `None` when the source holds no
+    * non-null key) and the distinct landing tokens of the rows the
+    * `landing` (condition, token) pair selects. Either part may be
+    * absent; with neither, no job runs. The one-row result gains
+    * nothing from adaptive re-planning, so it runs with AQE off: one
+    * job, where AQE would submit the partial stage as a job of its
+    * own. */
+  private def sourcePass(src: DataFrame,
+      rangeKey: Option[org.apache.spark.sql.Column],
+      landing: Option[(org.apache.spark.sql.Column,
+        org.apache.spark.sql.Column)]): (Option[(Any, Any)], Set[String]) = {
+    // collect_set skips NULL tokens, so they are counted apart: a NULL
+    // landing value must still reach the commit, which refuses it
+    val aggs = rangeKey.toSeq.flatMap(k => Seq(min(k), max(k))) ++
+      landing.toSeq.flatMap { case (cond, tok) =>
+        val c = coalesce(cond, lit(false))
+        Seq(collect_set(when(c, tok)), count_if(c && tok.isNull)) }
+    if (aggs.isEmpty) (None, Set.empty)
+    else {
+      val r = org.apache.spark.sql.GraftPlanBridge.withSessionConf(
+        src.agg(aggs.head, aggs.tail: _*),
+        "spark.sql.adaptive.enabled" -> "false").head()
+      val bounds =
+        if (rangeKey.isEmpty || r.isNullAt(0)) None
+        else Some((r.get(0), r.get(1)))
+      val toks =
+        if (landing.isEmpty) Set.empty[String]
+        else r.getSeq[String](aggs.size - 2).toSet ++
+          (if (r.getLong(aggs.size - 1) > 0L) Set(null: String) else Nil)
+      (bounds, toks)
+    }
+  }
+
+  /** Entries holding ≥1 base row whose key matches a source key, with
+    * the distinct non-null `landTok` values of those matched rows —
+    * ONE join of the stats-pruned candidates with the source. Matches
+    * are attributed by FILE identity ([[SnapshotStore.entryDirCol]]),
+    * so discovery is uniform across partition-spec vintages
+    * ([[SnapshotStore.evolvePartitionSpec]]), and deletion vectors are
     * anti-applied (an already-deleted row can never re-match). The
-    * scan reads (key + row identity) of the stats-pruned candidates;
-    * the changeset side is AQE-broadcast when small. */
-  private def touchedEntriesByKey(spark: SparkSession, root: String,
+    * join aliases base `"b"` and source `"c"` like the resolve join,
+    * so `landTok` may read both sides (a partition-moving UPDATE's new
+    * token); the source side is AQE-broadcast when small. */
+  private def touchedByKey(spark: SparkSession, root: String,
       m: SnapshotStore.Manifest,
       schema: org.apache.spark.sql.types.StructType,
-      cand: Seq[SnapshotStore.Entry], changeKeys: DataFrame,
-      keyTarget: String): Seq[SnapshotStore.Entry] =
-    if (cand.isEmpty) Seq.empty
+      cand: Seq[SnapshotStore.Entry], src: DataFrame, keyTarget: String,
+      keySource: String, landTok: Option[org.apache.spark.sql.Column])
+      : (Seq[SnapshotStore.Entry], Set[String]) =
+    if (cand.isEmpty) (Seq.empty, Set.empty)
     else {
-      val dirs = SnapshotStore
+      val hits = SnapshotStore
         .readEntriesWithPositions(spark, root, schema, cand)
-        .select(col(keyTarget), SnapshotStore.entryDirCol.as("__dir"))
-        .join(changeKeys, Seq(keyTarget), "left_semi")
-        .select(col("__dir")).distinct()
-        .collect().map(_.getString(0)).toSet
+        .withColumn("__dir", SnapshotStore.entryDirCol).alias("b")
+        .join(src.alias("c"), col(s"b.$keyTarget") === col(s"c.$keySource"))
+        .select(col("b.__dir"),
+          landTok.getOrElse(lit(null).cast("string")).as("__tok"))
+        .distinct().collect()
       val byDir = m.entries.map(e => e.dir -> e).toMap
-      dirs.toSeq.sorted.map(byDir)
+      (hits.map(_.getString(0)).distinct.sorted.map(byDir).toSeq,
+        hits.flatMap(r => Option(r.getString(1))).toSet)
     }
 
   /** Change-row presence marker: non-null on every `changes` row, so
@@ -110,12 +155,12 @@ object MergeInto {
     * commits one ~KB pointer swap. Readers racing the MERGE see the
     * whole pre- or whole post-merge snapshot, never a mix.
     *
-    * The discovery pass scans base (key, partCol) only — two columns
-    * reach the parquet scan — and the changeset sides of both the
-    * discovery semi-join and the resolve join are AQE-broadcast when
-    * small (the normal MERGE shape: changeset ≪ table). The whole
-    * read → resolve → commit sequence holds the table lock, so a
-    * concurrent backfill cannot be silently reverted (lost update);
+    * The discovery pass scans base (key + row identity) only, and the
+    * changeset sides of both the discovery join and the resolve join
+    * are AQE-broadcast when small (the normal MERGE shape: changeset ≪
+    * table). The whole read → resolve → commit sequence holds the
+    * table lock, so a concurrent backfill cannot be silently reverted
+    * (lost update);
     * an update may MOVE a row across partitions — both the source and
     * destination partitions land in the touched set, so the row
     * appears exactly once after the commit — and a delete that drains
@@ -143,38 +188,42 @@ object MergeInto {
     * LAND in their own partition (insert or update — a superset is
     * safe: restating an untouched partition rewrites it unchanged);
     * `resolve` computes the post-merge content of the touched
-    * partitions. The changeset is MATERIALIZED once (localCheckpoint)
-    * before any of the four passes that read it (key-range stats,
-    * matched-key discovery, landing partitions, the resolve join): a
+    * partitions. The changeset is MATERIALIZED once (pinned) before
+    * any of the passes that read it (one aggregate for the key-range
+    * stats and the landing partitions, the matched-key discovery join,
+    * the resolve join, the CDC join): a
     * non-deterministic source (rand()/uuid()/now()-derived keys or
     * partitions) re-evaluated per pass would let discovery and resolve
     * disagree — rows landing outside dropValues, or matched base rows
     * escaping the rewrite. Delta/Iceberg materialize their MERGE
     * source for exactly this reason.
     *
-    * Materialization durability: the default `localCheckpoint(true)`
-    * stores blocks on executor local storage with NO lineage — on a
-    * multi-executor cluster, losing one executor mid-MERGE fails the
-    * whole statement (nothing to recompute from). Acceptable on this
-    * single-host engine; for cluster deployments set
+    * Materialization durability: the default pin
+    * ([[graft.util.Checkpoints.pin]], released when the commit returns
+    * or throws) stores blocks on executor local storage with NO
+    * lineage — on a multi-executor cluster, losing one executor
+    * mid-MERGE fails the whole statement (nothing to recompute from).
+    * Acceptable on this single-host engine; for cluster deployments set
     * `graft.merge.materialize=reliable` to use
     * `persist(MEMORY_AND_DISK_2)` with a count() barrier instead:
     * blocks are replicated 2×, so one lost executor degrades to
     * reading the replica, and only losing BOTH replicas falls back to
     * lineage recomputation (where a non-deterministic source could in
     * principle diverge — the Delta trade-off). */
-  /** Materialize a MERGE source/changeset before multi-pass reads —
-    * `graft.merge.materialize=reliable` picks replicated persist over
-    * the default lineage-free localCheckpoint (see [[mergeCommitImpl]]
-    * scaladoc for the trade-off). Callers must `unpersist()` it. */
-  private def materialize(spark: SparkSession, df: DataFrame): DataFrame =
+  /** Materialize a MERGE source/changeset before multi-pass reads,
+    * with the handle that releases it (callers release in a `finally`)
+    * — `graft.merge.materialize=reliable` picks replicated persist over
+    * the default lineage-free pin ([[graft.util.Checkpoints.pin]]; see
+    * [[mergeCommitImpl]] scaladoc for the trade-off). */
+  private def materialize(spark: SparkSession, df: DataFrame)
+      : (DataFrame, () => Unit) =
     if (spark.conf.getOption("graft.merge.materialize")
         .contains("reliable")) {
       val c = df.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_2)
       c.count() // barrier: materialize before any pass reads it
-      c
-    } else df.localCheckpoint(true)
+      (c, () => c.unpersist())
+    } else graft.util.Checkpoints.pin(df)
 
   private def mergeCommitImpl(spark: SparkSession, root: String,
       changes0: DataFrame, key: String, partCol: String, sortCol: String,
@@ -197,21 +246,22 @@ object MergeInto {
       // multi-column and bucket layouts land exactly as the commit writes
       val spec = SnapshotStore.parseSpec(partCol)
       val schema = m.schema.getOrElse(SnapshotStore.read(spark, root).schema)
-      val changes = materialize(spark, changes0)
+      val (changes, release) = materialize(spark, changes0)
       try {
-        val changeKeys = changes.filter(col(key).isNotNull)
-          .select(col(key)).distinct()
         // manifest-stats pruning bounds the discovery scan to the
         // entries whose key range intersects the changeset's — decided
         // on the ~KB manifest before any file listing; the scan then
         // attributes matches to ENTRIES by file identity, uniform
         // across spec vintages (old-vintage entries MIGRATE to the
-        // current layout with the restatement)
-        val touchedBase = touchedEntriesByKey(spark, root, m, schema,
-          candidateEntries(m, changes, key), changeKeys, key)
-        val touchedNew = changes.filter(landable)
-          .select(spec.tokenExpr(col).as("__tok")).distinct()
-          .collect().map(_.getString(0)).toSet
+        // current layout with the restatement). The key range and the
+        // landing tokens come from one aggregate over the changeset.
+        val keyType = prunableKeyType(m, key,
+          changes.schema.fields.find(_.name == key).map(_.dataType))
+        val (bounds, touchedNew) = sourcePass(changes,
+          keyType.map(_ => col(key)), Some((landable, spec.tokenExpr(col))))
+        val (touchedBase, _) = touchedByKey(spark, root, m, schema,
+          candidateEntries(m, key, keyType, bounds), changes, key, key,
+          None)
         if (touchedBase.isEmpty && touchedNew.isEmpty) m.id
         else {
           val (touchedContent, dropValues, dropOld) = RowLevelOps
@@ -223,10 +273,10 @@ object MergeInto {
           // (usually broadcast-small) changes, proportional to the
           // touched data like the rewrite itself
           val cdc = cdcOf(touchedContent, changes)
-          SnapshotStore.restatePartitions(resolved, root, dropValues,
+          SnapshotStore.restatePartitions(Some(resolved), root, dropValues,
             partCol, sortCol, cdc = Some(cdc), dropOld = dropOld)
         }
-      } finally changes.unpersist()
+      } finally release()
     }
 
   /** Marker columns the CLAUSE-form merge rides in on: per-change-row
@@ -458,22 +508,26 @@ object MergeInto {
     * discover → resolve → commit sequence as [[mergeCommit]], with the
     * clause program evaluated ON the resolve join. `source` is the
     * statement's source relation AS IS (its own columns — no table
-    * alignment happens before the join). Discovery:
-    *   1. touchedBase — manifest-stats candidate pruning on the SOURCE
-    *      key's min/max, then a (key, partCol) semi-join, exactly the
-    *      marker path's shape;
-    *   2. insert landing — the insert clause's partition value over
-    *      source rows passing its (source-only) condition;
-    *   3. update landing — ONLY when SET moves the partition column: a
-    *      join pass over the touchedBase neighborhood evaluates the
-    *      new partition value of rows the UPDATE claims (matched rows
-    *      live in touchedBase partitions by construction, so the pass
-    *      is bounded by the touched data, never the table).
+    * alignment happens before the join). Discovery is two passes over
+    * the pinned source:
+    *   1. ONE aggregate: the SOURCE key's min/max (the manifest-stats
+    *      candidate prune) and the insert landing — the insert
+    *      clause's partition value over source rows passing its
+    *      (source-only) condition;
+    *   2. ONE join of the candidate entries with the source: the
+    *      touched entries (file-attributed, the marker path's shape)
+    *      and, ONLY when SET moves the partition column, the new
+    *      partition value of the rows the UPDATE claims (matched rows
+    *      live in the candidates by construction, so the pass is
+    *      bounded by the touched data, never the table).
     * Values are cast to the table column's type (SQL store-assignment
-    * semantics). CDC sidecar rows are derived from the same join.
-    * Every pass re-evaluates the clause expressions, so the SQL
-    * rewriter refuses non-deterministic/current-time expressions and
-    * subqueries — the same two-pass contract as row-level UPDATE. */
+    * semantics). The resolve write and the CDC sidecar read one
+    * materialized full-outer join of the touched content with the
+    * source, released when the commit returns or throws. The clause
+    * expressions are evaluated on more than one pass — the discovery
+    * join and that resolve/CDC join — so the SQL rewriter refuses
+    * non-deterministic/current-time expressions and subqueries — the
+    * same contract as row-level UPDATE. */
   def mergeGeneralCommit(spark: SparkSession, root: String,
       source: DataFrame, keyTarget: String, keySource: String,
       prog: MergeClauseProgram, partCol: String,
@@ -494,7 +548,7 @@ object MergeInto {
             c.equalsIgnoreCase(basePresentCol)),
         s"MERGE source must not carry the reserved marker columns " +
           s"$presentCol/$basePresentCol")
-      val src = materialize(spark, source)
+      val (src, release) = materialize(spark, source)
       try {
         val del = coalesce(prog.del, lit(false))
         val upd = coalesce(prog.upd, lit(false))
@@ -505,24 +559,20 @@ object MergeInto {
         def iv(n: String) = prog.insValues.get(n)
           .map(_.cast(tableSchema(n).dataType))
           .getOrElse(lit(null).cast(tableSchema(n).dataType))
-        // 1. touchedBase: stats-pruned key discovery, attributed to
-        // ENTRIES by file identity (vintage-uniform, DV-applied)
-        val keyed = src.select(col(keySource).as(keyTarget))
-        val changeKeys = keyed.filter(col(keyTarget).isNotNull).distinct()
-        // no WHEN MATCHED clause → matched rows can never change →
-        // nothing key-matched needs restating (a full-coverage
-        // by-source no-op sync touches zero partitions)
-        val touchedBase =
-          if (!prog.hasMatchedClauses) Seq.empty
-          else touchedEntriesByKey(spark, root, m,
-            tableSchema, candidateEntries(m, keyed, keyTarget),
-            changeKeys, keyTarget)
-        val touchedDirs = touchedBase.map(_.dir).toSet
-        // 2. insert landing (bare-source evaluation; each component
-        // value is cast through its column's TYPE first, so the token
-        // renders exactly as the commit will render it)
-        val insLanding: Set[String] =
-          if (prog.insSourceValues.isEmpty) Set.empty
+        // 1. one aggregate over the source: the key range for the
+        // manifest-stats candidate prune, and the insert landing — the
+        // insert clause's partition value over source rows passing its
+        // (source-only) condition, each component cast through its
+        // column's TYPE first, so the token renders exactly as the
+        // commit will render it. No WHEN MATCHED clause → matched rows
+        // can never change → nothing key-matched needs restating (a
+        // full-coverage by-source no-op sync touches zero partitions)
+        val keyType =
+          if (!prog.hasMatchedClauses) None
+          else prunableKeyType(m, keyTarget,
+            Some(src.select(col(keySource)).schema.head.dataType))
+        val insLandTok =
+          if (prog.insSourceValues.isEmpty) None
           else {
             val missing = spec.sourceCols
               .filterNot(prog.insSourceValues.contains)
@@ -530,21 +580,25 @@ object MergeInto {
               s"MERGE insert clause provides no value for partition " +
                 s"source column(s) ${missing.mkString(", ")} — " +
                 "unreachable, the rewrite checks coverage")
-            src.filter(coalesce(prog.insSourceCond, lit(false)))
-              .select(spec.tokenExpr(n => prog.insSourceValues(n)
-                .cast(tableSchema(n).dataType)).as("__tok"))
-              .distinct().collect().map(_.getString(0)).toSet
+            Some((prog.insSourceCond, spec.tokenExpr(n =>
+              prog.insSourceValues(n).cast(tableSchema(n).dataType))))
           }
-        // 3. update landing (join pass, only for partition-moving SETs)
-        val updLanding: Set[String] =
-          if (!prog.partColMovedByUpdate || touchedBase.isEmpty) Set.empty
-          else generalJoin(
-              SnapshotStore.readEntriesWhere(spark, root,
-                e => touchedDirs(e.dir)),
-              src, keyTarget, keySource)
-            .filter(matchedCol && !del && upd)
-            .select(spec.tokenExpr(n => uv(n)).as("__tok")).distinct()
-            .collect().map(_.getString(0)).toSet
+        val (bounds, insLanding) = sourcePass(src,
+          keyType.map(_ => col(keySource)), insLandTok)
+        // 2. touchedBase + update landing: ONE join of the candidate
+        // entries (attributed to ENTRIES by file identity —
+        // vintage-uniform, DV-applied) with the source; for a
+        // partition-moving SET it also renders the new partition value
+        // of the rows the UPDATE claims (matched rows live in the
+        // touched entries by construction, so the pass is bounded by
+        // the candidates, never the table)
+        val (touchedBase, updLanding) =
+          if (!prog.hasMatchedClauses) (Seq.empty, Set.empty[String])
+          else touchedByKey(spark, root, m, tableSchema,
+            candidateEntries(m, keyTarget, keyType, bounds), src,
+            keyTarget, keySource,
+            if (!prog.partColMovedByUpdate) None
+            else Some(when(!del && upd, spec.tokenExpr(n => uv(n)))))
         // 4. by-source discovery: a NOT MATCHED BY SOURCE clause can
         // claim an unmatched base row in ANY partition. Stats-prune
         // the candidates on the bare clause condition (bareCond is the
@@ -602,37 +656,42 @@ object MergeInto {
           val (touchedContent, dropValues, dropOld) = RowLevelOps
             .restatementScope(spark, root, touchedEntries, spec,
               extraLanding)
-          val joined = generalJoin(touchedContent, src,
-            keyTarget, keySource)
           val bsDel = prog.bySource
             .map(b => coalesce(b.bsDel, lit(false))).getOrElse(lit(false))
           val bsUpd = prog.bySource
             .map(b => coalesce(b.bsUpd, lit(false))).getOrElse(lit(false))
           def bv(n: String) = prog.bySource.flatMap(_.updValues.get(n))
             .map(_.cast(tableSchema(n).dataType)).getOrElse(col(s"b.$n"))
-          val resolved = joined
-            .filter(!(matchedCol && del) && !(changeOnlyCol && !ins) &&
-              !(baseOnlyCol && bsDel))
-            .select(tableCols.map { n =>
-              when(matchedCol && !del && upd, uv(n))
-                .when(changeOnlyCol, iv(n))
-                .when(baseOnlyCol && !bsDel && bsUpd, bv(n))
-                .otherwise(col(s"b.$n")).as(n)
-            }: _*)
           def rowB = struct(
             tableCols.toIndexedSeq.map(n => col(s"b.$n").as(n)): _*)
           def rowU = struct(tableCols.toIndexedSeq.map(n => uv(n).as(n)): _*)
           def rowI = struct(tableCols.toIndexedSeq.map(n => iv(n).as(n)): _*)
           def rowBs = struct(tableCols.toIndexedSeq.map(n => bv(n).as(n)): _*)
-          val cdc = cdcEvents(joined, matchedCol, changeOnlyCol,
-            del, upd, ins, rowDel = rowB, rowPre = rowB, rowPost = rowU,
-            rowIns = rowI, tableCols,
-            bySource = prog.bySource.map(_ =>
-              (baseOnlyCol, bsDel, bsUpd, rowBs)))
-          SnapshotStore.restatePartitions(resolved, root, dropValues,
-            partCol, sortCol, cdc = Some(cdc), dropOld = dropOld)
+          // the resolve write and the CDC sidecar read ONE materialized
+          // full-outer join instead of evaluating it once each
+          val (joined, releaseJoin) = materialize(spark,
+            generalJoin(touchedContent, src, keyTarget, keySource))
+          try {
+            val resolved = joined
+              .filter(!(matchedCol && del) && !(changeOnlyCol && !ins) &&
+                !(baseOnlyCol && bsDel))
+              .select(tableCols.map { n =>
+                when(matchedCol && !del && upd, uv(n))
+                  .when(changeOnlyCol, iv(n))
+                  .when(baseOnlyCol && !bsDel && bsUpd, bv(n))
+                  .otherwise(col(s"b.$n")).as(n)
+              }: _*)
+            val cdc = cdcEvents(joined, matchedCol, changeOnlyCol,
+              del, upd, ins, rowDel = rowB, rowPre = rowB, rowPost = rowU,
+              rowIns = rowI, tableCols,
+              bySource = prog.bySource.map(_ =>
+                (baseOnlyCol, bsDel, bsUpd, rowBs)))
+            SnapshotStore.restatePartitions(Some(resolved), root,
+              dropValues, partCol, sortCol, cdc = Some(cdc),
+              dropOld = dropOld)
+          } finally releaseJoin()
         }
-      } finally src.unpersist()
+      } finally release()
     }
 
   /** Partitions whose manifest key-range could hold a change key —
@@ -647,32 +706,47 @@ object MergeInto {
     * Cost: one min/max aggregate over the changeset (the small side of
     * every MERGE) + an O(entries) driver loop. */
   private[graft] def candidatePartitions(m: SnapshotStore.Manifest,
-      changes: DataFrame, key: String): Option[Set[String]] = {
-    // the comparison type must be the BASE column's — the type the
-    // stat strings were captured under. A changeset carrying the key
-    // as a different type (long base, string changes) would make the
-    // comparator read numeric stat strings lexically and mis-prune;
-    // the resolve join would still match via implicit casts, so the
-    // only safe answer for a type mismatch is "no pruning".
-    val keyType = m.schema.flatMap(_.fields.find(_.name == key))
-      .map(_.dataType).getOrElse(return None)
-    if (changes.schema.fields.find(_.name == key)
-        .exists(_.dataType != keyType)) return None
-    if (!SnapshotStore.supportedStatType(keyType)) return None
-    if (m.entries.isEmpty) return Some(Set.empty)
-    if (!m.entries.exists(_.stats.exists(_.cols.contains(key)))) return None
-    val b = changes.filter(col(key).isNotNull)
-      .agg(min(col(key)), max(col(key))).collect().head
-    if (b.isNullAt(0)) return Some(Set.empty)
-    val cmin = SnapshotStore.statString(b.get(0))
-    val cmax = SnapshotStore.statString(b.get(1))
-    Some(m.entries.filter { e =>
-      e.stats.flatMap(_.cols.get(key)) match {
-        case Some(cs) =>
-          SnapshotStore.statCompare(keyType, cs.max, cmin) >= 0 &&
-            SnapshotStore.statCompare(keyType, cs.min, cmax) <= 0
-        case None => true // stats-less entry: conservatively a candidate
-      }
-    }.map(_.value).toSet)
+      changes: DataFrame, key: String): Option[Set[String]] =
+    prunableKeyType(m, key,
+      changes.schema.fields.find(_.name == key).map(_.dataType)).map { t =>
+      if (m.entries.isEmpty) Set.empty[String]
+      else pruneToKeyRange(m, key, t, sourcePass(changes, Some(col(key)),
+        None)._1)
+    }
+
+  /** The key type the key-range prune compares under, or None when it
+    * cannot prune. The comparison type must be the BASE column's — the
+    * type the stat strings were captured under. A changeset carrying
+    * the key as a different type (long base, string changes) would make
+    * the comparator read numeric stat strings lexically and mis-prune;
+    * the resolve join would still match via implicit casts, so the only
+    * safe answer for a type mismatch is "no pruning". */
+  private def prunableKeyType(m: SnapshotStore.Manifest, key: String,
+      changeKeyType: Option[org.apache.spark.sql.types.DataType])
+      : Option[org.apache.spark.sql.types.DataType] =
+    m.schema.flatMap(_.fields.find(_.name == key)).map(_.dataType)
+      .filter(t => !changeKeyType.exists(_ != t) &&
+        SnapshotStore.supportedStatType(t) &&
+        (m.entries.isEmpty ||
+          m.entries.exists(_.stats.exists(_.cols.contains(key)))))
+
+  /** Values of the entries whose key range could hold a change key in
+    * `bounds` (the changeset's non-null min/max; None = no non-null
+    * key, so nothing can match). Entries WITHOUT key stats stay in. */
+  private def pruneToKeyRange(m: SnapshotStore.Manifest, key: String,
+      keyType: org.apache.spark.sql.types.DataType,
+      bounds: Option[(Any, Any)]): Set[String] = bounds match {
+    case None => Set.empty
+    case Some((lo, hi)) =>
+      val cmin = SnapshotStore.statString(lo)
+      val cmax = SnapshotStore.statString(hi)
+      m.entries.filter { e =>
+        e.stats.flatMap(_.cols.get(key)) match {
+          case Some(cs) =>
+            SnapshotStore.statCompare(keyType, cs.max, cmin) >= 0 &&
+              SnapshotStore.statCompare(keyType, cs.min, cmax) <= 0
+          case None => true // stats-less entry: conservatively a candidate
+        }
+      }.map(_.value).toSet
   }
 }

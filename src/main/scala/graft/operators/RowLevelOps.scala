@@ -49,13 +49,24 @@ import org.apache.spark.sql.functions._
   * filter scans of candidate partitions + either KB-scale vectors or
   * the restated partitions), never to table size.
   *
-  * CONTRACT: `cond` and every SET value must be DETERMINISTIC — they
-  * are evaluated on multiple passes (discovery, CDC, rewrite), and a
-  * `rand()`-dependent predicate would let passes disagree. The SQL
-  * entry points ([[graft.plans.SnapshotUpdateRewrite]]) enforce this
-  * at analysis; Scala callers own it. SQL NULL semantics: a NULL
-  * condition row is NOT matched (`WHERE NULL` selects nothing), so
-  * the condition is null-coalesced to false on every pass. */
+  * Discovery is evaluated ONCE per statement: the matched rows (data
+  * columns, row identity, entry dir) are pinned
+  * ([[graft.util.Checkpoints.pin]]) and released when the commit
+  * returns or throws. Routing, landing tokens, DV positions, DV
+  * post-images and the CDC images all read that pinned frame, so a
+  * table carrying vectors pays their broadcast once, not once per
+  * consumer.
+  *
+  * CONTRACT: `cond` and every SET value must be DETERMINISTIC. The
+  * pinned discovery serves every consumer of the MATCHED rows, but
+  * copy-on-write restatement content is a second pass: it re-reads
+  * the touched partitions whole and re-evaluates `cond` (and, for
+  * UPDATE, the SET values) over them, so a `rand()`-dependent
+  * predicate would let the restated content disagree with the CDC and
+  * routing. The SQL entry points ([[graft.plans.SnapshotUpdateRewrite]])
+  * enforce this at analysis; Scala callers own it. SQL NULL semantics:
+  * a NULL condition row is NOT matched (`WHERE NULL` selects nothing),
+  * so the condition is null-coalesced to false on every pass. */
 object RowLevelOps {
 
   private def dvConf(spark: SparkSession): (Boolean, Double) = (
@@ -63,16 +74,17 @@ object RowLevelOps {
     spark.conf.getOption("graft.dv.maxDeleteFraction")
       .map(_.toDouble).getOrElse(0.2))
 
-  /** The scanned row's manifest entry dir — see
-    * [[SnapshotStore.entryDirCol]]. */
-  private def dirOfFile: Column = SnapshotStore.entryDirCol
+  /** The pinned discovery frame's entry-dir column: the scanned row's
+    * manifest entry dir, see [[SnapshotStore.entryDirCol]]. */
+  private val DirCol = "__dir"
 
   /** Shared discovery state for one row-level statement. */
   private final case class Discovery(
       m: SnapshotStore.Manifest,
       schema: org.apache.spark.sql.types.StructType,
-      discMeta: DataFrame, // DV-applied candidates + (file, pos)
-      matched: DataFrame, // discMeta rows satisfying the condition
+      // PINNED: the DV-applied candidates satisfying the condition —
+      // data columns + (file, pos) + DirCol
+      matched: DataFrame,
       hitByDir: Map[String, Long], // matched-row count per entry dir
       dvGroups: Seq[Entry], // HIT entries taking the DV path
       cowEntries: Seq[Entry]) // ALL entries of COW-routed value groups
@@ -94,24 +106,41 @@ object RowLevelOps {
       cowEntries = (d.cowEntries ++ extraCow).distinctBy(_.dir))
   }
 
-  /** Scan the stats-pruned candidates (DV-applied, with row identity),
-    * count matches per entry dir, and route each hit
-    * (spec-vintage, value) group to the DV or COW strategy. */
-  private def discover(spark: SparkSession, root: String,
+  /** Scan the stats-pruned candidates (DV-applied, with row identity)
+    * once, PIN the matched rows, count them per entry dir, route each
+    * hit (spec-vintage, value) group to the DV or COW strategy, and run
+    * `body` on the result. The pin is released after `body` returns or
+    * throws. */
+  private def withDiscovery[T](spark: SparkSession, root: String,
       m: SnapshotStore.Manifest, base: DataFrame,
-      matchedCond: Column, spec: graft.etl.PartitionSpec): Discovery = {
+      matchedCond: Column, spec: graft.etl.PartitionSpec)
+      (body: Discovery => T): T = {
     val schema = m.schema.getOrElse(base.schema)
     val candEntries = graft.etl.StatsPruning
       .candidateValues(m, base, matchedCond) match {
       case Some(vs) => m.entries.filter(e => vs(e.value))
       case None => m.entries
     }
-    val discMeta = SnapshotStore.readEntriesWithPositions(spark, root,
-      schema, candEntries)
-    val matched = discMeta.filter(matchedCond)
-    val hitByDir: Map[String, Long] = matched
-      .groupBy(dirOfFile.as("__dir")).agg(count(lit(1L)).as("__n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (matched, release) = graft.util.Checkpoints.pin(SnapshotStore
+      .readEntriesWithPositions(spark, root, schema, candEntries)
+      .filter(matchedCond).withColumn(DirCol, SnapshotStore.entryDirCol))
+    try body(route(spark, root, m, schema, matched, spec))
+    finally release()
+  }
+
+  /** Per-dir hit counts over the pinned matched rows (one single-stage
+    * job), then the DV/COW routing of [[withDiscovery]]. */
+  private def route(spark: SparkSession, root: String,
+      m: SnapshotStore.Manifest,
+      schema: org.apache.spark.sql.types.StructType, matched: DataFrame,
+      spec: graft.etl.PartitionSpec): Discovery = {
+    import spark.implicits._
+    val hitByDir: Map[String, Long] = matched.select(col(DirCol)).as[String]
+      .mapPartitions { dirs =>
+        val n = scala.collection.mutable.HashMap.empty[String, Long]
+        dirs.foreach(d => n(d) = n.getOrElse(d, 0L) + 1L)
+        n.iterator
+      }.collect().groupMapReduce(_._1)(_._2)(_ + _)
     val (dvEnabled, maxFrac) = dvConf(spark)
     val byDir = m.entries.map(e => e.dir -> e).toMap
     // strategy decision at (vintage, value)-GROUP granularity: COW
@@ -129,7 +158,7 @@ object RowLevelOps {
     }
     val cowKeys = cowGroupsM.keySet
     val cowEntries = m.entries.filter(e => cowKeys(groupKey(e)))
-    val d0 = Discovery(m, schema, discMeta, matched, hitByDir,
+    val d0 = Discovery(m, schema, matched, hitByDir,
       dvGroupsM.values.flatten.toSeq.sortBy(_.dir), cowEntries)
     // old-vintage HIT entries that restate MIGRATE their rows to
     // current-spec landing values — a DV group at one of those values
@@ -150,18 +179,18 @@ object RowLevelOps {
   }
 
   /** The DV delta inputs for [[SnapshotStore.restatePartitions]]:
-    * ordered (dir → hit count) list + one keyed positions frame. */
-  private def dvInputs(spark: SparkSession, d: Discovery)
+    * ordered (dir → hit count) list + one keyed positions frame, keyed
+    * by a literal dir → index map over the pinned rows (no join). */
+  private def dvInputs(d: Discovery)
       : (Seq[(String, Long)], Option[DataFrame]) =
     if (d.dvGroups.isEmpty) (Nil, None)
     else {
       val dvEntries = d.dvGroups.map(e => e.dir -> d.hitByDir(e.dir))
-      import spark.implicits._
-      val keyDf = dvEntries.map(_._1).zipWithIndex
-        .toDF("__dir", DvEntCol)
-      val positions = d.matched.withColumn("__dir", dirOfFile)
-        .join(broadcast(keyDf), Seq("__dir"))
-        .select(col(DvEntCol), col(DvFileCol), col(DvPosCol))
+      val index = typedLit(dvEntries.map(_._1).zipWithIndex.toMap)
+      val positions = d.matched
+        .filter(col(DirCol).isInCollection(dvEntries.map(_._1)))
+        .select(index(col(DirCol)).as(DvEntCol), col(DvFileCol),
+          col(DvPosCol))
       (dvEntries, Some(positions))
     }
 
@@ -225,69 +254,83 @@ object RowLevelOps {
       val unknown = setMap.keySet.diff(base.columns.toSet)
       require(unknown.isEmpty, s"SET of unknown column(s): $unknown")
       val spec = SnapshotStore.parseSpec(partCol)
-      val d0 = discover(spark, root, m, base, matchedCond, spec)
-      if (d0.hitByDir.isEmpty) m.id
-      else {
-        val dataCols = d0.schema.fieldNames.toIndexedSeq
-        def q(n: String) = s"`${n.replace("`", "``")}`"
-        val movesPartition = spec.sourceCols.exists(setMap.contains)
-        def landTok = spec.tokenExpr(n =>
-          setMap.get(n).map(_.cast(d0.schema(n).dataType))
-            .getOrElse(col(q(n)))).as("__tok")
-        // a partition-moving SET can land COW rows in a value whose
-        // entries were DV-routed — restatement and vector attachment
-        // cannot share an entry, so colliding DV groups demote to COW
-        // (the superset of ALL matched rows' landing values is used:
-        // conservative, never wrong)
-        val d =
-          if (!movesPartition) d0
-          else demote(d0, d0.matched.select(landTok).distinct()
-            .collect().map(_.getString(0)).toSet)
-        // standard SQL UPDATE projection: assignments evaluate against
-        // pre-update values; non-matching rows pass through
-        val proj = dataCols.map { n =>
-          setMap.get(n) match {
-            case Some(v) => when(matchedCond, v).otherwise(col(q(n))).as(n)
-            case None => col(q(n))
+      withDiscovery(spark, root, m, base, matchedCond, spec) { d0 =>
+        if (d0.hitByDir.isEmpty) m.id
+        else {
+          val dataCols = d0.schema.fieldNames.toIndexedSeq
+          def q(n: String) = s"`${n.replace("`", "``")}`"
+          val movesPartition = spec.sourceCols.exists(setMap.contains)
+          // landing tokens: SET values substitute, CAST through the
+          // column type so bucket components hash the stored
+          // representation
+          def landTok = spec.tokenExpr(n =>
+            setMap.get(n).map(_.cast(d0.schema(n).dataType))
+              .getOrElse(col(q(n)))).as("__tok")
+          // a partition-moving SET: every matched row's landing token
+          // with its entry dir, in one pass over the pinned rows
+          val landByDir: Seq[(String, String)] =
+            if (!movesPartition) Nil
+            else d0.matched.select(col(DirCol), landTok).distinct()
+              .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+          // a partition-moving SET can land COW rows in a value whose
+          // entries were DV-routed — restatement and vector attachment
+          // cannot share an entry, so colliding DV groups demote to COW
+          // (the superset of ALL matched rows' landing values is used:
+          // conservative, never wrong)
+          val d = demote(d0, landByDir.map(_._2).toSet)
+          // standard SQL UPDATE projection: assignments evaluate against
+          // pre-update values; non-matching rows pass through
+          val proj = dataCols.map { n =>
+            setMap.get(n) match {
+              case Some(v) => when(matchedCond, v).otherwise(col(q(n))).as(n)
+              case None => col(q(n))
+            }
           }
+          // landing values of COW-matched rows
+          val cowDirs = d.cowEntries.map(_.dir).toSet
+          val landing = landByDir.collect {
+            case (dir, tok) if cowDirs(dir) => tok }.toSet
+          val (content, dropValues, dropOld) =
+            restatementScope(spark, root, d.cowEntries, spec, landing)
+          val resolvedCow = content.select(proj: _*)
+          // DV side: delete positions + post-image rows as additive parts
+          val (dvEntries, dvPositions) = dvInputs(d)
+          val dvDirs = d.dvGroups.map(_.dir).toSet
+          val postDv =
+            if (dvDirs.isEmpty) None
+            else Some(d.matched
+              .filter(col(DirCol).isInCollection(dvDirs.toSeq))
+              .select(proj: _*))
+          // where post-images land: with the partition source columns
+          // unassigned, a current-spec entry's rows land at that
+          // entry's own value (spec source columns cannot be widened,
+          // so they re-render to it); old-vintage entries restate
+          // under the current spec and a moving SET goes anywhere, so
+          // those tokens come from the pinned rows
+          val (scanDv, ownDv) = d.dvGroups.partition(e =>
+            movesPartition || e.spec.isDefined)
+          val scanDirs = scanDv.map(_.dir).toSet
+          val scanned: Set[String] =
+            if (scanDirs.isEmpty) Set.empty
+            else d.matched.filter(col(DirCol).isInCollection(scanDirs.toSeq))
+              .select(proj: _*)
+              .select(spec.tokenExpr(n => col(q(n))).as("__tok"))
+              .distinct().collect().map(_.getString(0)).toSet
+          val appendValues = ownDv.map(_.value).toSet ++ scanned -- dropValues
+          val resolved = postDv
+            .map(resolvedCow.unionByName(_)).getOrElse(resolvedCow)
+          // row-exact CDC: every matched row's pre- and post-image,
+          // from the pinned discovery rows
+          val pre = d.matched.select(dataCols.map(n => col(q(n))): _*)
+          val post = d.matched.select(proj: _*)
+          val cdc = pre.withColumn("_change_type", lit("update_preimage"))
+            .unionByName(
+              post.withColumn("_change_type", lit("update_postimage")))
+          SnapshotStore.restatePartitions(Some(resolved), root, dropValues,
+            partCol, sortCol, cdc = Some(cdc), dropOld = dropOld,
+            appendValues = appendValues, dvPositions = dvPositions,
+            dvEntries = dvEntries)
         }
-        // landing tokens of COW-matched rows (only when SET moves the
-        // partition): SET values substitute, CAST through the column
-        // type so bucket components hash the stored representation
-        val cowDirs = d.cowEntries.map(_.dir).toSet
-        val landing: Set[String] =
-          if (!movesPartition || cowDirs.isEmpty) Set.empty
-          else d.matched.filter(dirOfFile.isInCollection(cowDirs.toSeq))
-            .select(landTok)
-            .distinct().collect().map(_.getString(0)).toSet
-        val (content, dropValues, dropOld) =
-          restatementScope(spark, root, d.cowEntries, spec, landing)
-        val resolvedCow = content.select(proj: _*)
-        // DV side: delete positions + post-image rows as additive parts
-        val (dvEntries, dvPositions) = dvInputs(spark, d)
-        val dvDirs = d.dvGroups.map(_.dir).toSet
-        val postDv =
-          if (dvDirs.isEmpty) None
-          else Some(d.matched
-            .filter(dirOfFile.isInCollection(dvDirs.toSeq))
-            .select(proj: _*))
-        val appendValues: Set[String] = postDv.map(
-          _.select(spec.tokenExpr(n => col(q(n))).as("__tok"))
-            .distinct().collect().map(_.getString(0)).toSet -- dropValues)
-          .getOrElse(Set.empty)
-        val resolved = postDv
-          .map(resolvedCow.unionByName(_)).getOrElse(resolvedCow)
-        // row-exact CDC: every matched row's pre- and post-image,
-        // derived from the same DV-applied discovery read
-        val pre = d.matched.select(dataCols.map(n => col(q(n))): _*)
-        val post = d.matched.select(proj: _*)
-        val cdc = pre.withColumn("_change_type", lit("update_preimage"))
-          .unionByName(
-            post.withColumn("_change_type", lit("update_postimage")))
-        SnapshotStore.restatePartitions(resolved, root, dropValues,
-          partCol, sortCol, cdc = Some(cdc), dropOld = dropOld,
-          appendValues = appendValues, dvPositions = dvPositions,
-          dvEntries = dvEntries)
       }
     }
 
@@ -309,24 +352,27 @@ object RowLevelOps {
       val matchedCond = coalesce(cond, lit(false))
       val base = SnapshotStore.read(spark, root)
       val spec = SnapshotStore.parseSpec(partCol)
-      val d = discover(spark, root, m, base, matchedCond, spec)
-      if (d.hitByDir.isEmpty) m.id
-      else {
-        val dataCols = d.schema.fieldNames.toIndexedSeq
-        def q(n: String) = s"`${n.replace("`", "``")}`"
-        val (content, dropValues, dropOld) =
-          restatementScope(spark, root, d.cowEntries, spec, Set.empty)
-        val resolved =
-          if (d.cowEntries.isEmpty) base.limit(0) // typed empty frame
-          else content.filter(!matchedCond)
-        val (dvEntries, dvPositions) = dvInputs(spark, d)
-        // row-exact CDC sidecar: exactly the deleted rows (DV + COW),
-        // from the same DV-applied discovery read
-        val cdc = d.matched.select(dataCols.map(n => col(q(n))): _*)
-          .withColumn("_change_type", lit("delete"))
-        SnapshotStore.restatePartitions(resolved, root, dropValues,
-          partCol, sortCol, cdc = Some(cdc), dropOld = dropOld,
-          dvPositions = dvPositions, dvEntries = dvEntries)
+      withDiscovery(spark, root, m, base, matchedCond, spec) { d =>
+        if (d.hitByDir.isEmpty) m.id
+        else {
+          val dataCols = d.schema.fieldNames.toIndexedSeq
+          def q(n: String) = s"`${n.replace("`", "``")}`"
+          val (content, dropValues, dropOld) =
+            restatementScope(spark, root, d.cowEntries, spec, Set.empty)
+          // every group on the DV route: no data is restated at all
+          // (a pre-schema table still commits the typed empty content)
+          val resolved =
+            if (d.cowEntries.isEmpty && m.schema.isDefined) None
+            else Some(content.filter(!matchedCond))
+          val (dvEntries, dvPositions) = dvInputs(d)
+          // row-exact CDC sidecar: exactly the deleted rows (DV + COW),
+          // from the pinned discovery rows
+          val cdc = d.matched.select(dataCols.map(n => col(q(n))): _*)
+            .withColumn("_change_type", lit("delete"))
+          SnapshotStore.restatePartitions(resolved, root, dropValues,
+            partCol, sortCol, cdc = Some(cdc), dropOld = dropOld,
+            dvPositions = dvPositions, dvEntries = dvEntries)
+        }
       }
     }
 }

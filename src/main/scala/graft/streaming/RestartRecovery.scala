@@ -70,10 +70,16 @@ object RestartRecovery {
       ((unix_timestamp(col("ts")) - lit(lo)) / lit(span))
         .cast("int"))
 
-    def landSlice(c: Int): Unit =
+    // slices are stamped as chunks 0-3 and the sentinels as chunk 4, so
+    // phase B replays 2, 3, sentinels in that order on any filesystem
+    // clock (a tie could replay slice 3 first, and the watermark would
+    // then drop slice 2)
+    def landSlice(c: Int): Unit = {
       sliced.filter(col("slice") === c).drop("slice")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$landing/chunk_$c")
+      StreamDrain.stampChunk(s"$landing/chunk_$c", c)
+    }
 
     def landSentinels(): Unit = {
       import spark.implicits._
@@ -82,6 +88,7 @@ object RestartRecovery {
         .toDF("ts", "event_type", "value")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$landing/chunk_9_sentinel")
+      StreamDrain.stampChunk(s"$landing/chunk_9_sentinel", 4)
     }
 
     // one incarnation of the query — both phases build it identically,

@@ -88,14 +88,19 @@ object StreamDrain {
     dir
   }
 
+  /** Stamps every file under `chunkDir` with chunk `c`'s mtime, base +
+    * c minutes. The file source replays the oldest mtime first, so
+    * chunk c arrives as batch c on any filesystem clock, where write
+    * order would tie on coarse-mtime filesystems and replay in
+    * arbitrary order. */
+  def stampChunk(chunkDir: String, c: Int): Unit =
+    Option(new java.io.File(chunkDir).listFiles()).getOrElse(Array.empty)
+      .foreach(_.setLastModified(1700000000000L + c * 60000L))
+
   /** Writes `ev` as `nChunks` single-file chunks `dir/chunk_<c>`, cut by
     * `event_id` hash or, when `chronological`, at event-time quantiles
     * of `ts` (equal timestamps never straddle a cut, so per-key replay
-    * order is event time). The file source replays the oldest mtime
-    * first, so every file of chunk c is stamped base + c minutes: chunk
-    * c arrives as batch c on any filesystem clock, where write order
-    * would tie on coarse-mtime filesystems and replay in arbitrary
-    * order. */
+    * order is event time), each stamped by [[stampChunk]]. */
   def stageChunks(ev: DataFrame, dir: String, nChunks: Int,
       chronological: Boolean = false): Unit = {
     val cut: Int => Column = if (chronological) {
@@ -109,8 +114,7 @@ object StreamDrain {
     (0 until nChunks).foreach { c =>
       val chunk = s"$dir/chunk_$c"
       ev.filter(cut(c)).coalesce(1).write.mode("overwrite").parquet(chunk)
-      Option(new java.io.File(chunk).listFiles()).getOrElse(Array.empty)
-        .foreach(_.setLastModified(1700000000000L + c * 60000L))
+      stampChunk(chunk, c)
     }
   }
 

@@ -24,10 +24,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Releasing a checkpointed frame's blocks invalidates THAT frame (its
   * plan reads the blocks directly); callers must only release frames
-  * they no longer reference. Handles are identified by diffing the
-  * context's persistent-RDD registry around the checkpoint call, which
-  * assumes no concurrent checkpointing on the same context — true for
-  * the operators here (single driver thread per job chain).
+  * they no longer reference. A handle names the RDD the checkpointed
+  * frame's own `LogicalRDD` reads, so threads may pin concurrently on
+  * one context (DML commits on different tables do): each handle
+  * releases only its own blocks.
   *
   * Availability trade: a local checkpoint keeps its blocks only in the
   * executor that computed them and cuts the lineage behind them, so
@@ -46,13 +46,11 @@ object Checkpoints {
   /** Eagerly localCheckpoint `df`; returns the checkpointed frame and
     * a handle that releases its pinned blocks (idempotent). */
   def pin(df: DataFrame): (DataFrame, () => Unit) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val cp = df.localCheckpoint(true)
-    val mine = (sc.getPersistentRDDs.keySet -- before).toSeq
-    val handle = () => mine.foreach { id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
+    val mine = cp.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }
+    val handle = () => mine.foreach(_.unpersist(blocking = false))
     (cp, handle)
   }
 

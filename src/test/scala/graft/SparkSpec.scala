@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 /** Shared local SparkSession for suites (one per suite, lazy), built
   * by [[graft.GraftSession]] exactly like the production Verify/Bench
@@ -15,6 +18,37 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(4)
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Spark jobs started while `f` runs. Listener events arrive
+    * asynchronously, so a fence job after `f` closes the count: once the
+    * listener has seen the fence start, it has seen every job `f`
+    * started. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val fence = s"graft-spec-job-fence-${java.util.UUID.randomUUID()}"
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      sc.setJobDescription(fence)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      var jobs = 0
+      var seen = started.poll(60, TimeUnit.SECONDS)
+      while (seen != fence) {
+        assert(seen != null, "fence job never reached the listener")
+        jobs += 1
+        seen = started.poll(60, TimeUnit.SECONDS)
+      }
+      (out, jobs)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Run `f` against a FRESH session built with [[graft.GraftExtensions]]
     * (getOrCreate would return a shared extension-less session), then

@@ -1,7 +1,10 @@
 package graft.util
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 
 /** Lifecycle contract of the checkpoint-release util: pin materializes
   * and registers blocks, release drops exactly them (idempotently),
@@ -58,5 +61,36 @@ class CheckpointsSpec extends SparkSpec {
     assert(cur.head().getLong(0) === 32L)
     release()
     assert(pinnedCount === 0)
+  }
+
+  test("concurrent pins: each handle releases only its own blocks") {
+    def registry = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = registry
+    val n = 4
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(n)
+    try {
+      val futures = (1 to n).map { i =>
+        pool.submit(new Callable[(DataFrame, () => Unit)] {
+          def call(): (DataFrame, () => Unit) = {
+            go.await()
+            Checkpoints.pin((1 to 100 * i).toDF("x"))
+          }
+        })
+      }
+      go.countDown()
+      val pins = futures.map(_.get(120, TimeUnit.SECONDS))
+      assert((registry -- before).size === n, "one pinned RDD per pin")
+      pins.indices.foreach { i =>
+        val live = registry
+        pins(i)._2()
+        assert((live -- registry).size === 1,
+          s"handle $i must release exactly its own RDD")
+        // the frames not yet released still read their own blocks
+        (i + 1 until n).foreach(j =>
+          assert(pins(j)._1.count() === 100L * (j + 1)))
+      }
+      assert(registry === before)
+    } finally pool.shutdownNow()
   }
 }

@@ -2,47 +2,14 @@ package graft.util
 
 import graft.{SparkSpec, Tables}
 import graft.etl.MergeTreeWriter
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 /** [[ParquetOpen.read]] opens parquet paths exactly as schema-less
   * `spark.read.parquet` does (same schema, same rows) without the
   * one-task schema-inference job, and hands every case where Spark's
   * answer could differ back to Spark. */
 class ParquetOpenSpec extends SparkSpec {
-
-  /** Spark jobs started while `f` runs. Listener events arrive
-    * asynchronously, so a fence job after `f` closes the count: once the
-    * listener has seen the fence start, it has seen every job `f`
-    * started. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val started = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = f
-      sc.setJobDescription("parquet-open-fence")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      var jobs = 0
-      var seen = started.poll(60, TimeUnit.SECONDS)
-      while (seen != "parquet-open-fence") {
-        assert(seen != null, "fence job never reached the listener")
-        jobs += 1
-        seen = started.poll(60, TimeUnit.SECONDS)
-      }
-      (out, jobs)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
