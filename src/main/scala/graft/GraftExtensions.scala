@@ -63,6 +63,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) => catalystExpression(f(exprs.map(column)))))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // fork-free local file modes: applied here, when the builder takes
+    // the extensions, so a context created by that builder caches the
+    // NIO filesystem as its first `file:` FileSystem
+    graft.util.NioLocalFileSystem.install()
     // METADATA-ONLY AGGREGATES: whole-table COUNT(*)/MIN/MAX over
     // snapshot relations answered from manifest stats — zero data-file
     // scans. MUST run before SnapshotDvReadRewrite: count(*) is exact

@@ -44,13 +44,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Checkpoints {
 
   /** Eagerly localCheckpoint `df`; returns the checkpointed frame and
-    * a handle that releases its pinned blocks (idempotent). */
+    * a handle that releases its pinned blocks (idempotent). The handle
+    * drops them the way the context cleaner does: `RDD.unpersist` would
+    * log a lineage-truncation WARN for every release, although a
+    * released frame is by contract never read again. */
   def pin(df: DataFrame): (DataFrame, () => Unit) = {
     val cp = df.localCheckpoint(true)
     val mine = cp.queryExecution.logical.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }
-    val handle = () => mine.foreach(_.unpersist(blocking = false))
+    val handle = () => mine.foreach(org.apache.spark.GraftCoreBridge.unpersist)
     (cp, handle)
   }
 

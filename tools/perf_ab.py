@@ -17,12 +17,15 @@ bound: (change - parent) / parent, signed so that worse is positive, must
 not exceed `bound`. A metric also gets "gain" when the change won at least
 9 of 10 pairs and the medians differ by more than the parent's
 interquartile range. Wrong outputs and failed operations are counted per
-side. Nothing in the checkout is written: the tool only reads
+side. Each pair is also printed on its own line with every run's host CPU
+steal (from perfbench's stderr report), so a pair taken during a host
+stall shows as one. Nothing in the checkout is written: the tool only reads
 `BENCHMARK.json` and runs `perfbench/` inside the exported copies.
 """
 import argparse
 import json
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -51,10 +54,18 @@ def run_once(copy: str, workload: str, seed: int, seconds: float) -> dict:
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
         cwd=copy, capture_output=True, text=True, timeout=900)
     lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
+    steal = re.findall(r"host CPU steal during the run ([0-9.]+)%", p.stderr)
     if not lines:
         sys.stderr.write(p.stderr[-2000:])
-        return {"correct": False, "attempted": 0, "failed": 0, "metrics": {}}
-    return json.loads(lines[-1])
+        out = {"correct": False, "attempted": 0, "failed": 0, "metrics": {}}
+    else:
+        out = json.loads(lines[-1])
+    out["steal_pct"] = float(steal[-1]) if steal else None
+    return out
+
+
+def steal_str(r: dict) -> str:
+    return "n/a" if r["steal_pct"] is None else f"{r['steal_pct']:.1f}%"
 
 
 def quartiles(xs: list) -> tuple:
@@ -109,7 +120,8 @@ def main() -> int:
             if a.workload == "all" else a.workload.split(",")
         for w in names:
             pairs, tally = [], {s: [0, 0, 0] for s in sides}
-            for k, seed in enumerate(seeds_of(a.seeds)):
+            seeds = seeds_of(a.seeds)
+            for k, seed in enumerate(seeds):
                 order = ("parent", "change") if k % 2 == 0 \
                     else ("change", "parent")
                 res = {}
@@ -121,7 +133,7 @@ def main() -> int:
                     t[1] += r["failed"]
                     t[2] += r["attempted"]
                     print(f"[perf_ab] {w} seed={seed} {side}: correct="
-                          f"{r['correct']} " + " ".join(
+                          f"{r['correct']} steal={steal_str(r)} " + " ".join(
                               f"{m}={v['value']:.4g}"
                               for m, v in r["metrics"].items()),
                           file=sys.stderr, flush=True)
@@ -129,6 +141,8 @@ def main() -> int:
             rows = summarize(bench["end_to_end"], pairs)
             report["workloads"][w] = {
                 "metrics": rows,
+                "pairs": [{"seed": sd, "parent": p, "change": c}
+                          for sd, (p, c) in zip(seeds, pairs)],
                 "wrong_runs": {s: t[0] for s, t in tally.items()},
                 "failed_ops": {s: f"{t[1]}/{t[2]}" for s, t in tally.items()}}
             print(f"== {w}  ({len(pairs)} pairs, {seconds:g} s; wrong runs "
@@ -145,6 +159,13 @@ def main() -> int:
                       f"{r['worse_by']:+.3f} (bound {r['bound']}: "
                       f"{'ok' if r['within_bound'] else 'EXCEEDED'})"
                       f"{'  gain' if r['gain'] else ''}")
+            for sd, (p, c) in zip(seeds, pairs):
+                print(f"  pair seed={sd}: " + "  ".join(
+                    f"{name} {p['metrics'][name]['value']:.4g} -> "
+                    f"{c['metrics'][name]['value']:.4g}"
+                    for name in rows
+                    if name in p["metrics"] and name in c["metrics"]) +
+                    f"  steal parent {steal_str(p)} change {steal_str(c)}")
             sys.stdout.flush()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
